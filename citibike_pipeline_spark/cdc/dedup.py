@@ -58,11 +58,14 @@ def lww_dedup_agg(
     """LWW collapse as a hash aggregate: max_by(payload, (lsn, op_rank, …)).
 
     Semantically identical to lww_dedup (struct comparison is lexicographic,
-    same total order) but physically much better at scale: ONE hash exchange
-    with MAP-SIDE PARTIAL aggregation — duplicates and redeliveries collapse
-    before the shuffle, so shuffle volume scales with distinct keys, not
-    events — and no per-partition sort at all (the window variant must sort
-    every partition). This is the merge hot path's resolver kernel.
+    same total order) but with ONE hash exchange and MAP-SIDE PARTIAL
+    aggregation: duplicates and redeliveries collapse before the shuffle, so
+    shuffle volume scales with distinct keys, not events (the window variant
+    shuffles every event). It is not sort-free: ``max_by`` over a payload
+    struct that holds strings has no fixed-width aggregation buffer, so
+    Spark plans ``Sort`` + ``SortAggregate`` on both sides of the exchange
+    (checked with ``explain()`` on Spark 4.1). This is the merge hot path's
+    resolver kernel.
 
     ``extra_order_cols`` are appended ASCENDING-max tiebreaks (pass e.g.
     ``F.coalesce(F.col("ingest_epoch"), F.lit(-1))`` for "later epoch wins,

@@ -8,14 +8,15 @@ Per-epoch dataflow (`apply_epoch`)::
     bronze.read_epoch(e)                       -- directory-pruned scan
       |> skip partitions already in manifest   -- exactly-once fast path
       |> reconcile to silver superset schema   -- typed-NULL padding (evolution)
-      |> MERGE INTO silver, LWW resolver       -- ONE max_by hash aggregate
-      |                                           over (target ∪ events)
-      |                                           resolves duplicates,
-      |                                           redeliveries and cross-epoch
-      |                                           LWW in a single shuffle (map-
-      |                                           side partial collapse, no
-      |                                           sort), then the salted
-      |                                           bucketed write on hash(conv_id)
+      |> MERGE INTO silver, LWW resolver       -- ONE max_by aggregate over
+      |                                           (target ∪ events) resolves
+      |                                           duplicates, redeliveries and
+      |                                           cross-epoch LWW in a single
+      |                                           shuffle (map-side partial
+      |                                           collapse; a sort aggregate,
+      |                                           see cdc.dedup.lww_dedup_agg),
+      |                                           then the salted bucketed
+      |                                           write on hash(conv_id)
       |> write commit manifests (epoch, partition_id) + lineage stats
       |                                           (stats recorded at landing)
       |> advance checkpoint, append metrics
@@ -26,7 +27,9 @@ LWW-resolve max_by aggregate over (target ∪ events) on the full
 duplicates BEFORE the exchange (shuffle volume scales with distinct keys,
 not events) — plus the salted write repartition (hash(conv_id) buckets, hot
 conversations spread over `write_salt` tasks by a deterministic key-hash
-salt; see lake.table._write_data_files). A separate pre-dedup pass would
+salt; see lake.table._write_data_files). The resolve is one shuffle but not
+sort-free: the payload struct holds strings, so each side of its exchange
+sorts for a sort aggregate. A separate pre-dedup pass would
 be pure overhead: winner-of-winners equals the global winner. The
 aggregate's hash exchange on the full key spreads hot conversations across
 turn_idx.
@@ -482,12 +485,13 @@ class CdcEngine:
             silver.add_columns([StructField(f.name, f.dataType, True) for f in new_payload])
             silver = self.silver  # reload snapshot
 
-        # observability: hot conversations in this epoch (drives salt sizing)
+        # observability: hot conversations in this epoch (metrics only; the
+        # write salt is the table's fixed write_salt)
         hot = self._hot_from_landing([epoch])
         if hot is None:
             hot = self._detect_hot_sampled(events, n_events)
 
-        # No pre-dedup pass: the LWW merge resolver windows over
+        # No pre-dedup pass: the LWW merge resolver aggregates over
         # (target ∪ changes) anyway, and winner-of-winners equals the global
         # winner — pre-deduplicating would add a full extra shuffle+sort of
         # the event set for nothing. (The ≤1-row/key contract applies to the

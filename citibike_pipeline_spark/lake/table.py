@@ -20,6 +20,15 @@ snapshot file, then atomically replace VERSION. A crash before the replace
 leaves the table at the old snapshot with only orphan data files — exactly
 Iceberg's failure mode, and the basis of the CDC engine's exactly-once story.
 
+Both reads and writes go through one private SIDE SESSION per caller session
+(`_side_session`), a ``newSession()`` whose SQL conf the caller never sees.
+Reads build their parquet relation there, with file status listed on the
+driver: the paths are files the manifest names, so Spark's parallel
+discovery job (one task per file past 32 paths) is pure cost. The analyzed
+plan is then re-bound to the caller's session. Writes execute there with AQE
+off, since they size their partitions explicitly. If the plan transfer is
+unavailable, both fall back to the caller's session: correct, just slower.
+
 Scale notes: data is hash-bucketed on the table's key columns
 (``xxhash64 pmod n_buckets``). MERGE rewrites only touched buckets;
 bucket-pruned scans read only matching files. At 100 TB you raise
@@ -66,53 +75,84 @@ class CommitConflict(Exception):
     (optimistic concurrency, see LakeTable._commit)."""
 
 
+def _side_session(sess: SparkSession) -> SparkSession | None:
+    """The lake's side session for ``sess`` (module docstring): a
+    ``newSession()``, so it shares the SparkContext and re-applies the
+    builder-time options, but its conf never reaches ``sess``, where a
+    concurrently planned analytics query could observe it. Created once and
+    cached on ``sess``; None once plan transfer proved unavailable."""
+    if getattr(sess, "_lake_writer_unsupported", False):
+        return None
+    side = getattr(sess, "_lake_writer_session", None)
+    if side is None:
+        side = sess.newSession()
+        side.conf.set("spark.sql.adaptive.enabled", "false")
+        # list file status on the driver at any path count (Int.MaxValue is
+        # the threshold's upper bound)
+        side.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
+        sess._lake_writer_session = side
+    return side
+
+
+def _transfer(sess: SparkSession, df: DataFrame, target: SparkSession) -> DataFrame | None:
+    """Re-bind ``df``'s analyzed plan to ``target`` (the caller's session
+    ``sess`` or its side session) with ``Dataset.ofRows`` on the JVM.
+
+    If that private surface moves in a future Spark, warn ONCE, mark
+    ``sess`` so no later call pays the py4j exception again, and return
+    None: callers then fall back to a plain frame on ``sess`` (writes run
+    with AQE on, reads list their files with a Spark job: correct, just
+    slower), never to conf mutation.
+    """
+    try:
+        jdf = sess._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            target._jsparkSession, df._jdf.logicalPlan()
+        )
+        return DataFrame(jdf, target)
+    except Exception as e:
+        import warnings
+
+        warnings.warn(
+            f"lake side-session plan transfer unavailable ({e!r:.120}); "
+            "lake writes will run with AQE enabled and lake reads will list "
+            "their files with a Spark job, both on the shared session"
+        )
+        sess._lake_writer_unsupported = True
+        return None
+
+
 def _writer_view(df: DataFrame) -> DataFrame:
-    """Re-bind ``df``'s logical plan to a dedicated WRITER SESSION whose
-    SQLConf has AQE disabled, leaving the caller's session untouched.
+    """Re-bind ``df``'s logical plan to the side session, whose SQLConf has
+    AQE disabled, leaving the caller's session untouched.
 
     Why: lake writes size their partitions explicitly (shuffle_partitions +
     bucket/salt repartition + hot-key salting), so adaptive re-planning buys
     nothing and costs a measurable serial driver pause at every stage
-    boundary (~0.4-0.7 s per merge at local[8]). The previous implementation
-    toggled ``spark.sql.adaptive.enabled`` on the SHARED session around the
-    write, which a concurrently-planned analytics query could observe (the
-    r3 verdict's "single-writer seam" caveat). A ``newSession()`` shares the
-    SparkContext/cluster but has isolated SQL conf — the structural scope.
-
-    The writer session is created once per parent session and cached on it;
-    ``newSession()`` re-applies the builder-time options (shuffle
-    partitions, NTZ timestamps, Arrow, committer), so write plans keep the
-    same semantics minus AQE. Plan transfer uses ``Dataset.ofRows`` on the
-    JVM; if that private surface moves in a future Spark, the caller falls
-    back to executing on the original session (AQE on — correct, just
-    slower), never to conf mutation.
+    boundary (~0.4-0.7 s per merge at local[8]).
     """
     sess = df.sparkSession
-    if getattr(sess, "_lake_writer_unsupported", False):
-        return df
-    writer = getattr(sess, "_lake_writer_session", None)
-    if writer is None:
-        writer = sess.newSession()
-        writer.conf.set("spark.sql.adaptive.enabled", "false")
-        sess._lake_writer_session = writer
-    try:
-        jdf = sess._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            writer._jsparkSession, df._jdf.logicalPlan()
-        )
-        return DataFrame(jdf, writer)
-    except Exception as e:
-        # capability probe failed (the private classic.Dataset surface
-        # moved): warn ONCE, remember, and never pay the py4j exception
-        # again — writes fall back to the shared session with AQE on
-        # (correct, just without the ~0.4-0.7 s/merge AQE-off win)
-        import warnings
+    side = _side_session(sess)
+    out = _transfer(sess, df, side) if side is not None else None
+    return df if out is None else out
 
-        warnings.warn(
-            f"lake writer-session plan transfer unavailable ({e!r:.120}); "
-            "writes will run with AQE enabled on the shared session"
-        )
-        sess._lake_writer_unsupported = True
-        return df
+
+def _scan(spark: SparkSession, schema: StructType, paths: list[str]) -> DataFrame:
+    """Parquet scan of manifest-named files that starts no Spark job.
+
+    ``spark.read.parquet`` lists more than 32 paths with a Spark job of one
+    task per path, when the frame is built. The relation is built in the
+    side session instead and re-bound to ``spark``, so the frame plans under
+    the caller's conf and joins with its frames."""
+    side = _side_session(spark)
+    if side is not None:
+        df = _transfer(spark, side.read.schema(schema).parquet(*paths), spark)
+        if df is not None:
+            return df
+    return spark.read.schema(schema).parquet(*paths)
+
+
 DAY_COL = "_day"
 
 
@@ -400,7 +440,7 @@ class LakeTable:
             return empty_df(self.spark, schema)
         # Explicit snapshot schema: files predating an ADD COLUMN evolve by
         # padding typed NULLs at scan time (no rewrite).
-        return self.spark.read.schema(schema).parquet(*[self._abs(f["path"]) for f in files])
+        return _scan(self.spark, schema, [self._abs(f["path"]) for f in files])
 
     def read_deletes(
         self,
@@ -429,7 +469,7 @@ class LakeTable:
             files = [f for f in files if f.get("bucket") is None or f["bucket"] in bset]
         if not files:
             return empty_df(self.spark, schema)
-        return self.spark.read.schema(schema).parquet(*[self._abs(f["path"]) for f in files])
+        return _scan(self.spark, schema, [self._abs(f["path"]) for f in files])
 
     def schema(self) -> StructType:
         return self.current_snapshot().schema()
@@ -470,7 +510,7 @@ class LakeTable:
             # key-scoped merges — files carry both in the manifest
             proj = proj.withColumn(DAY_COL, F.to_date(F.col(snap.day_col)).cast("string"))
             part_cols = [DAY_COL, BUCKET_COL]
-        # Execute the write under the dedicated AQE-off writer session (see
+        # Execute the write under the AQE-off side session (see
         # _writer_view): the shared session's conf is never touched, so a
         # concurrent analytics query can never observe adaptive=false.
         (

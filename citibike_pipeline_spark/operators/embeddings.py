@@ -139,28 +139,6 @@ def _plane_components(p: int) -> list[float]:
     return [math.sin(_PLANE_FREQ * (p + 1) * i) for i in range(1, DIMS + 1)]
 
 
-def _plane_dot(p: int):
-    """sum_i emb[i] * plane_p[i] — the plane is a CONSTANT literal array, so
-    the dot is one zip_with pass (sequential left fold; the oracle renders
-    the identical literals in the identical add order). The index-walk
-    alternative, element_at(embedding, i) per i, re-inlines the embedding
-    expression per index when it is a derived array — e03's augmented
-    copies made that O(dims²) per plane."""
-    plane = F.array(*[F.lit(c) for c in _plane_components(p)])
-    return F.aggregate(
-        F.zip_with(F.col("embedding"), plane, lambda x, s: x.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _bucket_expr(n_planes: int = N_PLANES):
-    return sum(
-        (F.when(_plane_dot(p) > 0, F.lit(2 ** p)).otherwise(F.lit(0)) for p in range(n_planes)),
-        start=F.lit(0),
-    )
-
-
 def e02_lsh_buckets(
     spark: SparkSession, sf: str, n_planes: int | None = None
 ) -> DataFrame:
@@ -169,10 +147,10 @@ def e02_lsh_buckets(
         # auto-size from the scanned corpus (sizing.py); 8 at the gate corpus
         n_planes = auto_lsh_planes(emb.count())
     # bucket via e03's vectorized SRP kernel with ONE table — bit-identical
-    # to _bucket_expr (same literal components, dim-ordered accumulation ==
-    # the zip_with left fold, same strict > 0, same Σ 2^p assembly) without
-    # evaluating planes x dims interpreted scalar ops per row; spread so the
-    # single-split scan doesn't run the whole pass on one task
+    # to the oracle's per-plane fold (_bucket_sql: same literal components,
+    # dim-ordered accumulation, same strict > 0, same Σ 2^p assembly)
+    # without evaluating planes x dims interpreted scalar ops per row;
+    # spread so the single-split scan doesn't run the whole pass on one task
     return (
         spread(emb)
         .select(
@@ -269,7 +247,7 @@ def _np_srp_buckets_udf(n_planes: int, n_tables: int):
     """All n_tables SRP bucket ids per vector in one vectorized pass,
     BIT-IDENTICAL to the per-plane fold: each plane dot accumulates
     dim-by-dim in index order against the identical literal components
-    (one vectorized add per dim == _plane_dot's left fold), the sign test
+    (one vectorized add per dim == the oracle's sequential sum), the sign test
     is the same strict > 0, and table t's bucket is Σ 2^p over its plane
     range. The JVM form evaluated tables x planes x dims scalar ops per
     row on the single-split scan task."""
@@ -784,28 +762,6 @@ FROM embeddings e JOIN cents c ON e.label = c.label
 KMEANS_ITERS = 4
 
 
-def _data_assign_cid(cents_col):
-    """argmin cid via an aggregate fold over a centroid ARRAY COLUMN with a
-    (dist, cid) struct accumulator — bit-identical arithmetic and tiebreak
-    to the unrolled literal form this replaced (same per-centroid zip_with
-    fold; `least` on structs is the same lexicographic (dist, cid) order
-    as array_min over unrolled entries), but the centroids arrive as DATA
-    (`_cents_frame`), so the expression tree is constant across Lloyd
-    iterations and whole-stage codegen compiles ONCE for all rounds. The
-    literal form re-embedded k x dims constants each round — measured as
-    multi-second recompiles per iteration (e09 28.5 s -> 11.7 s at sf0.1)."""
-    def step(acc, ct):
-        d = F.aggregate(
-            F.zip_with(F.col("e"), ct["c"], lambda x, cc: (x - cc) * (x - cc)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        return F.least(acc, F.struct(d.alias("dist"), ct["cid"].alias("cid")))
-
-    init = F.struct(F.lit(float("inf")).alias("dist"), F.lit(-1).alias("cid"))
-    return F.aggregate(cents_col, init, step)["cid"]
-
-
 def _cents_frame(spark: SparkSession, cents: dict[int, list[float]]) -> DataFrame:
     """The fitted centroids as ONE broadcastable row holding an
     array<struct<cid, c>> column, cid-ascending. Every consumer crossJoins
@@ -819,15 +775,15 @@ def _cents_frame(spark: SparkSession, cents: dict[int, list[float]]) -> DataFram
 
 
 def _np_assign_cid_udf(cents: dict[int, list[float]]):
-    """Vectorized argmin-cid assignment, BIT-IDENTICAL to _data_assign_cid:
-    the squared-L2 accumulates dim-by-dim in index order (one vectorized add
-    per dim == the same sequential left fold, every elementwise op a single
-    IEEE-754 double op), and np.argmin returns the FIRST minimum over the
-    cid-ascending centroid matrix — the same (dist, cid) lexicographic
-    tiebreak as F.least over structs. Centroids ride in the task closure
+    """Vectorized argmin-cid assignment, BIT-IDENTICAL to the oracle's
+    left-fold distances: the squared-L2 accumulates dim-by-dim in index
+    order (one vectorized add per dim == a sequential left fold, every
+    elementwise op a single IEEE-754 double op), and np.argmin returns the
+    FIRST minimum over the cid-ascending centroid matrix — the (dist, cid)
+    lexicographic tiebreak. Centroids ride in the task closure
     (k x dims doubles), so the plan has no centroid join and no per-k
-    codegen at all. Why this replaces the JVM fold (guide §4.2): the fold
-    evaluates k x dims interpreted scalar ops PER ROW — at sf1.0
+    codegen at all. Why not a JVM aggregate fold over a centroid array
+    (guide §4.2): it evaluates k x dims interpreted scalar ops PER ROW — at sf1.0
     (k=141, 20k vecs) one assignment pass was ~20 s on the single-split
     scan task; the BLAS-shaped version is milliseconds. The update/seed
     arithmetic stays engine-side (decimal sums, ROUND), so cross-engine
@@ -853,8 +809,7 @@ def _np_assign_cid_udf(cents: dict[int, list[float]]):
 def _np_pq_assign_udf(cents: dict):
     """_np_assign_cid_udf for per-block PQ codebooks: same left-fold
     arithmetic and first-min tiebreak, applied per block against that
-    block's cid-ascending codebook (exactly what _pq_assign's filtered
-    fold computes)."""
+    block's cid-ascending codebook only."""
     grouped: dict = {}
     for (b, cid), comps in cents.items():
         grouped.setdefault(b, []).append((cid, comps))
@@ -1294,23 +1249,6 @@ def _pq_cents_frame(spark: SparkSession, cents: dict) -> DataFrame:
         [([(b, c, cents[(b, c)]) for (b, c) in sorted(cents)],)],
         "cents: array<struct<block:int,cid:int,c:array<double>>>",
     )
-
-
-def _pq_assign(cents_col, block_col):
-    """argmin code over THIS block's centroids — same (dist, cid) fold as
-    _data_assign_cid, over the block-filtered codebook array."""
-    mine = F.filter(cents_col, lambda ct: ct["block"] == block_col)
-
-    def step(acc, ct):
-        d = F.aggregate(
-            F.zip_with(F.col("e"), ct["c"], lambda x, cc: (x - cc) * (x - cc)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        return F.least(acc, F.struct(d.alias("dist"), ct["cid"].alias("cid")))
-
-    init = F.struct(F.lit(float("inf")).alias("dist"), F.lit(-1).alias("cid"))
-    return F.aggregate(mine, init, step)["cid"]
 
 
 _PQ_MEMO: dict[tuple, dict] = register_session_memo({})

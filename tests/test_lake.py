@@ -233,3 +233,108 @@ def test_aqe_scope_isolated_from_analytics(spark, cat):
     assert w is not None and w.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert t.read().count() == 200
+
+
+DISCOVERY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _jobs_started(spark, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the ids
+    of the Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lake-scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lake scan planning")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plain(spark, t, schema, files):
+    """The reference scan: Spark's own reader over the same manifest files."""
+    paths = [os.path.join(t.path, f["path"]) for f in files]
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _assert_scan(spark, t, read, schema, files):
+    """``read()`` starts no Spark job, returns a frame of the caller's
+    session, and yields the rows of a plain read of ``files``."""
+    df, jobs = _jobs_started(spark, read)
+    assert jobs == [], f"building the scan started Spark jobs {jobs}"
+    assert df.sparkSession is spark
+    plain = _plain(spark, t, schema, files)
+    assert df.schema == plain.schema
+    assert _rows(df) == _rows(plain)
+
+
+def test_scan_plans_from_manifest_without_a_job(spark, cat):
+    """A lake scan lists the manifest's files on the driver: no Spark job
+    until it executes, even past the 32 paths where Spark's own reader
+    lists with a job. Pruning, time travel, hidden extra fields and
+    typed-NULL evolution padding read the same rows as a plain scan."""
+    t = cat.create_table("ns.tscan", SCHEMA, key_cols=["k", "seq"], n_buckets=40)
+    t.append(mk(spark, [(f"k{i}", i, "v", "I", i) for i in range(400)]))
+    v1 = t.current_snapshot()
+    t.add_columns([StructField("extra", StringType(), True)])
+    s2 = t.current_snapshot().schema()
+    t.append(spark.createDataFrame(
+        [(f"n{i}", i, "w", "U", 1000 + i, f"e{i}") for i in range(200)], s2))
+    snap = t.current_snapshot()
+    assert len(v1.files) > 32 and len(snap.files) > len(v1.files)
+
+    # the probe sees the job Spark's own reader starts past 32 paths
+    _, jobs = _jobs_started(spark, lambda: _plain(spark, t, s2, snap.files))
+    assert jobs, "job-group probe is blind to Spark's file-listing job"
+
+    _assert_scan(spark, t, t.read, s2, snap.files)
+    keep = {0, 5, 11}
+    _assert_scan(spark, t, lambda: t.read(buckets=sorted(keep)), s2,
+                 [f for f in snap.files if f["bucket"] in keep])
+    _assert_scan(spark, t, lambda: t.read(snapshot_id=v1.snapshot_id),
+                 v1.schema(), v1.files)
+    seq = StructField("_seq", IntegerType(), True)
+    _assert_scan(spark, t, lambda: t.read(extra_fields=[seq]),
+                 StructType([*s2.fields, seq]), snap.files)
+    # evolution padding: the pre-ADD COLUMN rows read a typed NULL
+    assert t.read().filter(F.col("extra").isNull()).count() == 400
+
+    # the setting lives only in the lake's side session
+    assert spark.conf.get(DISCOVERY) == "32"
+    assert spark._lake_writer_session.conf.get(DISCOVERY) == str(2**31 - 1)
+
+
+def test_delete_scan_plans_from_manifest_without_a_job(spark, cat):
+    """mor-del: the data read of an equality-delete table and its
+    read_deletes() start no Spark job either, bucket-pruned or not."""
+    t = cat.create_table("ns.tdel", SCHEMA, key_cols=["k", "seq"], n_buckets=40)
+    seq = StructField("_seq", IntegerType(), True)
+    del_schema = StructType([*SCHEMA.fields, seq])
+    cols = [f.name for f in SCHEMA.fields]
+    for c in range(9):  # up to 4 delete files a commit: past 32 in all
+        rows = [(f"k{i}", i, f"v{c}", "U", 10 * c + i) for i in range(100)]
+        t.append_with_deletes(mk(spark, rows), mk(spark, rows), cols)
+        if c == 0:
+            first = t.current_snapshot()
+    snap = t.current_snapshot()
+    assert len(snap.delete_files) > 32 and len(snap.files) > 32
+
+    # data files carry the table schema plus _seq, like the delete files
+    _assert_scan(spark, t, lambda: t.read(extra_fields=[seq]), del_schema,
+                 snap.files)
+    _assert_scan(spark, t, lambda: t.read_deletes(del_schema), del_schema,
+                 snap.delete_files)
+    # bucket-less delete entries survive pruning (read_deletes docstring)
+    _assert_scan(spark, t, lambda: t.read_deletes(del_schema, buckets=[3]),
+                 del_schema, snap.delete_files)
+    _assert_scan(
+        spark, t,
+        lambda: t.read_deletes(del_schema, snapshot_id=first.snapshot_id),
+        del_schema, first.delete_files,
+    )
