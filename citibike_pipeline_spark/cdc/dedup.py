@@ -55,10 +55,10 @@ def lww_dedup_agg(
     key_cols: list[str] | None = None,
     extra_order_cols: list | None = None,
 ) -> DataFrame:
-    """LWW collapse as a hash aggregate: max_by(payload, (lsn, op_rank, …)).
+    """LWW collapse as one aggregate: max_by(payload, (lsn, op_rank, …)).
 
     Semantically identical to lww_dedup (struct comparison is lexicographic,
-    same total order) but with ONE hash exchange and MAP-SIDE PARTIAL
+    same total order) but with ONE exchange and MAP-SIDE PARTIAL
     aggregation: duplicates and redeliveries collapse before the shuffle, so
     shuffle volume scales with distinct keys, not events (the window variant
     shuffles every event). It is not sort-free: ``max_by`` over a payload

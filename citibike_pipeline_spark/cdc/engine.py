@@ -90,30 +90,16 @@ class CdcEngine:
         hot_key_threshold: int = 50_000,
         merge_mode: str = "cow",
         mor_autocompact_deltas: int | None = 16,
-        mor_del_deletefile_limit: int | None = None,
         day_partition: bool = False,
     ):
-        if merge_mode not in ("cow", "mor", "mor-del"):
-            raise ValueError(
-                f"merge_mode must be 'cow', 'mor' or 'mor-del', got {merge_mode!r}"
-            )
+        if merge_mode not in ("cow", "mor"):
+            raise ValueError(f"merge_mode must be 'cow' or 'mor', got {merge_mode!r}")
         self.spark = spark
         self.merge_mode = merge_mode
-        # both merge-on-read variants share the delta-append write path and
-        # the autocompact policy; they differ only in HOW reads resolve:
-        # "mor" re-aggregates (full LWW max_by over base ∪ deltas), "mor-del"
-        # anti-joins equality-delete files (Iceberg v2 shape) — no read-side
-        # aggregate, cost bounded by the un-compacted delete-key set
-        self._mor_family = merge_mode in ("mor", "mor-del")
         # mor failure mode is unbounded read amplification from accumulated
         # deltas: fold them back into the base once this many delta commits
         # stack up (None = caller-driven compaction only)
         self.mor_autocompact_deltas = mor_autocompact_deltas
-        # mor-del minor-compaction policy (Iceberg rewrite-delete-files):
-        # once this many delete FILES accumulate, collapse them to one
-        # per-key entry set WITHOUT touching data files — the cheap
-        # between-folds maintenance step. None = caller-driven only.
-        self.mor_del_deletefile_limit = mor_del_deletefile_limit
         # SURVEY §4 partition spec at full width: days(ts) × bucket(conv_id).
         # The day axis prunes time-scoped analytics + retention; the bucket
         # axis prunes key-scoped merges. Off by default for tiny epochs
@@ -197,7 +183,7 @@ class CdcEngine:
         self.bronze.append_epoch_pandas(
             pdf.reindex(columns=[f.name for f in self.bronze.schema().fields]),
             epoch,
-            bucket_spec=None if self._mor_family
+            bucket_spec=None if self.merge_mode == "mor"
             else self._silver_bucket_spec(),
         )
 
@@ -298,8 +284,9 @@ class CdcEngine:
             # same documented total order (lsn, op_rank) pick every winner —
             # stale cross-epoch redeliveries lose to existing state, fresh
             # changes beat it. Tombstones ('D' winners) are RETAINED.
-            # max_by hash-aggregate kernel: one exchange, map-side partial
-            # collapse of duplicates, no sort (vs the window idiom).
+            # max_by aggregate: one exchange with map-side partial collapse
+            # of duplicates; each side of it sorts for a sort aggregate
+            # (see cdc.dedup.lww_dedup_agg).
             return lww_dedup_agg(
                 target.select(*silver_cols).unionByName(changes.select(*silver_cols)),
                 # deterministic pick among redelivered duplicates that tie on
@@ -334,41 +321,12 @@ class CdcEngine:
         side LWW resolve, so the logical state is unchanged.
         """
         silver_cols = [f.name for f in silver.schema().fields]
-        if self._mor_family:
+        if self.merge_mode == "mor":
             deduped = lww_dedup_agg(
                 changes.select(*silver_cols),
                 extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))],
             )
-            if self.merge_mode == "mor-del":
-                # Iceberg-v2 equality-delete commit: EVERY change key gets a
-                # delete entry carrying its LWW order tuple, so older row
-                # versions (and older duplicate commits of this same epoch,
-                # via the _seq tiebreak) are masked at read time instead of
-                # re-aggregated. deduped feeds two writes — persist so the
-                # dedup aggregate runs once.
-                deduped = deduped.persist()
-                try:
-                    dels = deduped.select(
-                        *silver.current_snapshot().key_cols,
-                        "lsn", "op", "ingest_epoch",
-                    )
-                    # delta_kind stamps WHICH mor variant wrote this delta:
-                    # an "eqdel" delta is self-masking (carries its delete
-                    # entries); a plain "mor" delta is not and can only be
-                    # read by the re-aggregate. The mor-del read path
-                    # validates this so a mode switch on a live table fails
-                    # loudly instead of resurfacing superseded versions.
-                    snap = silver.append_with_deletes(
-                        deduped,
-                        dels,
-                        delete_cols=list(dels.columns),
-                        summary={**summary, "mode": "mor_delta",
-                                 "delta_kind": "eqdel"},
-                    )
-                finally:
-                    deduped.unpersist()
-            else:
-                snap = silver.append(deduped, summary={**summary, "mode": "mor_delta"})
+            snap = silver.append(deduped, summary={**summary, "mode": "mor_delta"})
             return {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
         # Landing-time bucket stats make pruning free (no distinct+collect
         # job), so they win whenever present; without them the table-relative
@@ -586,7 +544,7 @@ class CdcEngine:
             hot = self._detect_hot_sampled(events, n_events)
         phases["hot_detect"] = round(time.time() - _t, 2)
 
-        # no pre-dedup: the LWW resolver's window subsumes it (see apply_epoch)
+        # no pre-dedup: the LWW resolver's aggregate subsumes it (see apply_epoch)
         changes = events.withColumn("ingest_epoch", F.col("checkpoint_epoch"))
         changes = reconcile_to_schema(
             changes.drop(*(c for c in _EVENT_META if c in changes.columns)),
@@ -665,7 +623,6 @@ class CdcEngine:
             # log by maybe_autocompact itself; the return stays [] so no
             # caller mistakes the fold for an applied epoch.
             self.maybe_autocompact()
-            self.maybe_compact_deletes()
             return []
         if catchup and len(pending) > 1:
             out = [self.apply_epochs(pending)]
@@ -676,12 +633,6 @@ class CdcEngine:
         auto = self.maybe_autocompact()
         if auto is not None:
             out[-1]["autocompact"] = auto
-        # delete-side minor compaction AFTER the depth policy: a full fold
-        # already replaced the delete files with collapsed guards, making
-        # this a no-op in that case
-        mc = self.maybe_compact_deletes()
-        if mc is not None:
-            out[-1]["compact_deletes"] = mc
         return out
 
     def touched_convs(self, epochs: list[int]) -> DataFrame:
@@ -715,15 +666,12 @@ class CdcEngine:
         Under mor the date filter applies AFTER the LWW resolve over an
         un-day-pruned read: a key's versions can span days, so pruning
         delta files by day could resolve a stale winner."""
-        prune_days = days if not self._mor_family else None
-        if self.merge_mode == "mor-del":
-            df = self._mor_del_resolved(buckets)
-        else:
-            df = self.silver.read(buckets=buckets, days=prune_days)
-            if self.merge_mode == "mor":
-                df = lww_dedup_agg(
-                    df, extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))]
-                )
+        mor = self.merge_mode == "mor"
+        df = self.silver.read(buckets=buckets, days=None if mor else days)
+        if mor:
+            df = lww_dedup_agg(
+                df, extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))]
+            )
         if days is not None:
             lo, hi = days
             d = F.to_date("ts")
@@ -733,124 +681,6 @@ class CdcEngine:
                 df = df.filter(d <= F.lit(hi))
         return df
 
-    @staticmethod
-    def _seq_field():
-        from pyspark.sql.types import IntegerType, StructField
-
-        return StructField("_seq", IntegerType(), True)
-
-    def _mor_del_schema(self, snap):
-        """Read schema of the equality-delete files: key columns + the LWW
-        order columns + the commit sequence number."""
-        from pyspark.sql.types import StructType
-
-        by_name = {f.name: f for f in snap.schema().fields}
-        return StructType(
-            [by_name[k] for k in snap.key_cols]
-            + [by_name["lsn"], by_name["op"], by_name["ingest_epoch"],
-               self._seq_field()]
-        )
-
-    def _mor_del_resolved(self, buckets: list[int] | None) -> DataFrame:
-        """mor-del read resolve: data files anti-joined against the
-        equality-delete entries — a row survives unless some delete entry
-        for its key is strictly newer in the total order
-        (lsn, op_rank, ingest_epoch, commit _seq).
-
-        Why this beats the "mor" full re-aggregate at scale: the delete side
-        is keys + three ints (delta entries bounded by the autocompact
-        policy, plus the retained per-key guards — bounded by distinct
-        changed keys until a ``compact(watermark_lsn=...)`` prunes them
-        under the redelivery contract), so it broadcasts while small and
-        degrades to a NARROW shuffled anti-join past the broadcast
-        threshold — row payloads never shuffle at read time either way. The ``_seq`` tiebreak is
-        what makes a crash-retried epoch structurally idempotent: the retry
-        commit's delete entries carry the same LWW tuple at a higher _seq
-        and mask the earlier commit's identical rows, while its own rows
-        (equal tuple, equal _seq) survive — at most one physical winner per
-        key, in every crash window, including re-apply after a compaction.
-        Base files written by compact predate ``_seq`` and read as NULL
-        (→ -1): any delta delete for the same key masks them iff strictly
-        newer, which the LWW tuple already guarantees.
-        """
-        # ONE snapshot pins both lists: data files and delete entries must
-        # come from the same commit, or a concurrent writer landing between
-        # two current-snapshot reads lets a newer delete mask an older file
-        # list (a key transiently vanishing — the "mor" path reads once and
-        # cannot tear this way).
-        snap = self.silver.current_snapshot()
-        # refuse deltas a "mor"-mode writer appended (no delete entries):
-        # without a read-side aggregate every superseded version in them
-        # would resurface as a duplicate row. Walk cost is bounded by the
-        # autocompact depth, driver-side JSON reads only.
-        for s in self._unfolded_delta_summaries(from_snap=snap):
-            if s.get("delta_kind") != "eqdel":
-                raise ValueError(
-                    "merge_mode='mor-del' cannot read delta commits written "
-                    "by merge_mode='mor' (no equality-delete entries — "
-                    "superseded versions would resurface as duplicates); "
-                    "compact() the table under 'mor' first, then switch"
-                )
-        keys = list(snap.key_cols)
-        rows = self.silver.read(
-            buckets=buckets,
-            snapshot_id=snap.snapshot_id,
-            extra_fields=[self._seq_field()],
-        )
-        dels = self.silver.read_deletes(
-            self._mor_del_schema(snap), buckets=buckets,
-            snapshot_id=snap.snapshot_id,
-        )
-
-        def ord_tuple(seq_col):
-            return F.struct(
-                F.col("lsn").alias("_o0"),
-                op_rank_col().alias("_o1"),
-                F.coalesce(F.col("ingest_epoch"), F.lit(-1)).alias("_o2"),
-                F.coalesce(seq_col, F.lit(-1)).alias("_o3"),
-            )
-
-        # Collapse to ONE delete entry per key — the max order tuple —
-        # BEFORE broadcasting: masking against only the per-key max is
-        # exactly equivalent (∃d: d > r  ⟺  max_d > r, the order is total),
-        # the broadcast build shrinks from Σ per-epoch entries to distinct
-        # changed keys, and each probe compares against exactly one entry
-        # instead of every commit the key ever appeared in (measured 2x
-        # end-to-end at delta depth 24, BENCH/mor_del_ab.json). This
-        # aggregate runs over the NARROW delete frame (keys + 3 ints) —
-        # row payloads still never shuffle, which is the mode's point.
-        d = lww_dedup_agg(
-            dels,
-            key_cols=keys,
-            extra_order_cols=[
-                F.coalesce(F.col("ingest_epoch"), F.lit(-1)),
-                F.coalesce(F.col("_seq"), F.lit(-1)),
-            ],
-        ).select(
-            *[F.col(k).alias(f"_d_{k}") for k in keys],
-            ord_tuple(F.col("_seq")).alias("_d_ord"),
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & (F.col(k) == F.col(f"_d_{k}"))
-        cond = cond & (F.col("_d_ord") > ord_tuple(F.col("_seq")))
-        # Broadcast only while the delete set is actually broadcast-sized —
-        # known for free from the manifest's per-file stats. Gate on BYTES
-        # (parquet footprint; the in-memory hashed relation runs a few times
-        # that, still well inside an executor at 64 MB on disk), falling
-        # back to a row bound for pre-stats entries. Past the threshold
-        # (accumulated guards for every key ever changed, when compaction
-        # runs without a redelivery watermark to prune them) the planner
-        # falls back to a narrow shuffled anti-join: keys + 3 ints on both
-        # shuffle sides, row payloads still never shuffle.
-        sizes = [f.get("bytes") for f in snap.delete_files]
-        if all(b is not None for b in sizes):
-            small = sum(int(b) for b in sizes) <= 64 * 1024 * 1024
-        else:
-            small = sum(int(f.get("rows") or 0) for f in snap.delete_files) <= 500_000
-        build = F.broadcast(d) if small else d
-        return rows.join(build, on=cond, how="left_anti").drop("_seq")
-
     def silver_view(self) -> DataFrame:
         """Logical silver: live turns only (tombstones filtered), stable
         (conv_id, turn_idx, lsn) order available via the kept lsn column."""
@@ -858,34 +688,25 @@ class CdcEngine:
             self.silver_resolved().filter(F.col("op") != "D").drop("op", "ingest_epoch")
         )
 
-    def _unfolded_delta_summaries(self, from_snap=None) -> list[dict]:
-        """Summaries of the delta-append commits above the last base fold
-        (newest first). Walks parent pointers; in steady state the walk is
-        bounded by the autocompact threshold (and by snapshot expiry after
-        each compact)."""
-        snap = from_snap if from_snap is not None else self.silver.current_snapshot()
-        out: list[dict] = []
+    def mor_delta_depth(self) -> int:
+        """Consecutive delta-append commits since the last base fold —
+        the read-amplification measure the autocompact policy bounds.
+        Walks parent pointers; in steady state the walk is bounded by the
+        autocompact threshold (and by snapshot expiry after each compact)."""
+        snap = self.silver.current_snapshot()
+        depth = 0
         while snap is not None:
-            op = snap.summary.get("operation")
             if snap.summary.get("mode") == "mor_delta":
-                out.append(snap.summary)
-            elif op not in ("add_columns", "rewrite_deletes"):
+                depth += 1
+            elif snap.summary.get("operation") != "add_columns":
                 # create/overwrite/replace_buckets rewrote (or seeded) the
-                # base — deltas below it are folded. Commits that touch no
-                # data files (add_columns, the delete-side minor compaction)
-                # neither add nor fold deltas: keep walking — treating
-                # rewrite_deletes as a fold would both reset the apparent
-                # depth AND hide un-folded deltas from the eqdel validation.
+                # base — deltas below it are folded. add_columns touches no
+                # data files: it neither adds nor folds deltas, keep walking.
                 break
             if snap.parent_id is None:
                 break
             snap = self.silver.get_snapshot(snap.parent_id)
-        return out
-
-    def mor_delta_depth(self) -> int:
-        """Consecutive delta-append commits since the last base fold —
-        the read-amplification measure the autocompact policy bounds."""
-        return len(self._unfolded_delta_summaries())
+        return depth
 
     def maybe_autocompact(self) -> dict | None:
         """Fold accumulated mor deltas once the depth crosses the policy
@@ -893,7 +714,7 @@ class CdcEngine:
         committed, so the fold sits off the apply path's critical section —
         a crash mid-compact loses nothing (the next resolve reads the same
         base ∪ deltas). Tombstones are retained (no watermark)."""
-        if not self._mor_family or self.mor_autocompact_deltas is None:
+        if self.merge_mode != "mor" or self.mor_autocompact_deltas is None:
             return None
         depth = self.mor_delta_depth()
         if depth < self.mor_autocompact_deltas:
@@ -917,62 +738,6 @@ class CdcEngine:
         )
         return record
 
-    def compact_deletes(self) -> dict:
-        """Minor compaction of the mor-del delete side (Iceberg's
-        rewrite-delete-files action): collapse the accumulated equality-
-        delete files to ONE entry per key — the max LWW order tuple, its
-        real (lsn, op, ingest_epoch, _seq) preserved — leaving every data
-        file untouched. Read-equivalence is exact: the mask only ever
-        compares a row against the per-key MAX (the order is total), so
-        physically storing just that winner changes no result. Unlike
-        compact(), NO watermark pruning happens here: the superseded
-        versions these entries mask are still physically present in the
-        delta data files, so every key's guard is load-bearing regardless
-        of the redelivery contract. Cost scales with the delete set (keys +
-        3 ints), never the table."""
-        if self.merge_mode != "mor-del":
-            raise ValueError("compact_deletes requires merge_mode='mor-del'")
-        silver = self.silver
-        snap = silver.current_snapshot()
-        dels = silver.read_deletes(
-            self._mor_del_schema(snap), snapshot_id=snap.snapshot_id
-        )
-        collapsed = lww_dedup_agg(
-            dels,
-            key_cols=list(snap.key_cols),
-            extra_order_cols=[
-                F.coalesce(F.col("ingest_epoch"), F.lit(-1)),
-                F.coalesce(F.col("_seq"), F.lit(-1)),
-            ],
-        )
-        cols = list(snap.key_cols) + ["lsn", "op", "ingest_epoch", "_seq"]
-        nxt = silver.rewrite_delete_files(collapsed.select(*cols), cols)
-        return {
-            "snapshot_id": nxt.snapshot_id,
-            "delete_files_before": len(snap.delete_files),
-            "delete_files_after": len(nxt.delete_files),
-        }
-
-    def maybe_compact_deletes(self) -> dict | None:
-        """Run the delete-side minor compaction once the delete FILE count
-        crosses the policy limit. Sits off the apply path like
-        maybe_autocompact; a crash mid-rewrite loses nothing (the next read
-        resolves the same mask from the old files)."""
-        if self.merge_mode != "mor-del" or self.mor_del_deletefile_limit is None:
-            return None
-        snap = self.silver.current_snapshot()
-        if len(snap.delete_files) < self.mor_del_deletefile_limit:
-            return None
-        t0 = time.time()
-        info = self.compact_deletes()
-        record = {
-            "compact_deletes": True,
-            **info,
-            "wall_sec": round(time.time() - t0, 2),
-        }
-        self._write_metrics(max(int(self.checkpoint()["last_epoch"]), 0), record)
-        return record
-
     def compact(self, watermark_lsn: int | None = None) -> dict:
         """Purge tombstones at-or-below the replay low-watermark + expire
         snapshots.
@@ -993,33 +758,8 @@ class CdcEngine:
         # under mor this is ALSO the delta-fold (minor compaction): the
         # resolved state is rewritten as a collapsed base
         live = self.silver_resolved().filter(keep)
-        guards = guard_cols = None
-        if self.merge_mode == "mor-del":
-            # RETAIN the delete entries as per-key version guards — they are
-            # what masks a stale redelivery that lands AFTER the fold (the
-            # base winner's "newer than you" proof; without them an old
-            # (key, lsn) re-appended post-compact would resurface because no
-            # read-side aggregate re-ranks it). Same retention contract as
-            # tombstones: guards at-or-below the redelivery watermark can
-            # never be needed and are dropped. Physically folded to ONE
-            # entry per key (the max order tuple) with _seq reset to -1 so
-            # a guard never masks the equal-tuple base row the fold just
-            # wrote (strictly-newer masking only).
-            cur = silver.current_snapshot()
-            dels = silver.read_deletes(self._mor_del_schema(cur))
-            if watermark_lsn is not None:
-                dels = dels.filter(F.col("lsn") > F.lit(int(watermark_lsn)))
-            guard_cols = list(cur.key_cols) + ["lsn", "op", "ingest_epoch", "_seq"]
-            guards = lww_dedup_agg(
-                dels.drop("_seq"),
-                key_cols=list(cur.key_cols),
-                extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))],
-            ).withColumn("_seq", F.lit(-1).cast("int"))
         snap = silver.overwrite(
-            live,
-            summary={"operation": "compact", "watermark_lsn": watermark_lsn},
-            deletes=guards,
-            delete_cols=guard_cols,
+            live, summary={"operation": "compact", "watermark_lsn": watermark_lsn}
         )
         removed = silver.expire_snapshots(keep_last=2)
         return {"snapshot_id": snap.snapshot_id, "files_removed": removed}

@@ -44,11 +44,12 @@ ingest epoch) would land the new version in a different cell while the old
 version survives untouched in the old one. Event-time partitioning is
 therefore correct for the APPEND-ONLY layers — bronze is already
 epoch-partitioned (``epoch=N/`` directories, the WAL's time axis) — and for
-key-immutable gold facts, but on an LWW-mutable table the sound scale axes
-are key-hash granularity (n_buckets) and, beyond that, merge-on-read
-deletes (Iceberg v2 positional/equality delete files), which trade rewrite
-cost for read-side merge cost. That extension point is `replace_buckets` —
-a MOR commit would append delete files instead of rewriting cells.
+key-immutable gold facts, but on an LWW-mutable table the sound scale axis
+is key-hash granularity (n_buckets). The CDC engine writes such a table in
+one of two ways: copy-on-write through `replace_buckets` (MERGE rewrites
+the touched buckets), or merge-on-read through `append` (each batch lands
+as a delta of new row versions, and the reader resolves the LWW winner
+over base ∪ deltas until a compaction `overwrite` folds them).
 """
 
 from __future__ import annotations
@@ -190,9 +191,9 @@ class Snapshot:
     write_salt: int = 4          # hot-bucket write spread (skew splitting)
     day_col: str | None = None   # time-partition dimension (Iceberg days(ts))
     files: list[dict[str, Any]] = field(default_factory=list)  # {path, bucket[, day]}
-    # Iceberg-v2-style equality-delete files: each lists keys (+ LWW order
-    # columns + commit seq) whose OLDER row versions are masked at read time
-    # (merge_mode="mor-del"). Folded (cleared) by overwrite/compact.
+    # Equality-delete files of the removed "mor-del" merge mode. No commit
+    # adds any; a legacy table that still lists some refuses reads (see
+    # LakeTable.read) until an older build compacts it.
     delete_files: list[dict[str, Any]] = field(default_factory=list)
     parent_id: int | None = None
     summary: dict[str, Any] = field(default_factory=dict)
@@ -209,13 +210,10 @@ class Snapshot:
         files: list[dict[str, Any]],
         summary: dict[str, Any],
         schema_json: str | None = None,
-        delete_files: list[dict[str, Any]] | None = None,
     ) -> "Snapshot":
         """Successor snapshot carrying the table spec forward — the ONE place
         spec fields propagate, so adding a spec field can't silently drop it
-        from some commit type. ``delete_files=None`` carries the parent's
-        delete set forward unchanged; pass an explicit list to extend (delta
-        commit) or clear (compaction fold)."""
+        from some commit type."""
         return Snapshot(
             snapshot_id=self.snapshot_id + 1,
             schema_json=schema_json or self.schema_json,
@@ -225,7 +223,7 @@ class Snapshot:
             write_salt=self.write_salt,
             day_col=self.day_col,
             files=files,
-            delete_files=self.delete_files if delete_files is None else delete_files,
+            delete_files=self.delete_files,
             parent_id=self.snapshot_id,
             summary=summary,
         )
@@ -398,7 +396,6 @@ class LakeTable:
         buckets: list[int] | None = None,
         snapshot_id: int | None = None,
         days: tuple[str | None, str | None] | None = None,
-        extra_fields: list | None = None,
     ) -> DataFrame:
         """Scan the table (optionally bucket-pruned / day-pruned / time-travel).
 
@@ -409,11 +406,6 @@ class LakeTable:
         partition pruning / BQ `PARTITION BY DATE + CLUSTER BY`
         (``raw_trips_current.sql:18-19``). Files without day metadata
         (null-ts partitions, legacy commits) are conservatively kept.
-
-        ``extra_fields`` appends StructFields to the read schema for hidden
-        per-row metadata columns stored in the files but absent from the
-        table schema (mor-del's ``_seq`` commit number; files that predate
-        the column pad typed NULLs).
         """
         if snapshot_id is None:
             snap = self.current_snapshot()
@@ -421,9 +413,17 @@ class LakeTable:
             snap = Snapshot.from_json(
                 fs.read_text(os.path.join(self._snap_dir, f"v{snapshot_id:09d}.json"))
             )
+        if snap.delete_files:
+            # only the removed "mor-del" mode wrote these; reading the data
+            # files without their masks would return superseded row
+            # versions as duplicate rows
+            raise ValueError(
+                f"{self.path}: snapshot v{snap.snapshot_id} lists "
+                f"{len(snap.delete_files)} equality-delete files, written by "
+                "the removed merge_mode='mor-del'; compact() it under "
+                "merge_mode='mor' with an older build, which folds them"
+            )
         schema = snap.schema()
-        for f in extra_fields or []:
-            schema = schema.add(f)
         files = snap.files
         if buckets is not None:
             bset = set(buckets)
@@ -442,46 +442,12 @@ class LakeTable:
         # padding typed NULLs at scan time (no rewrite).
         return _scan(self.spark, schema, [self._abs(f["path"]) for f in files])
 
-    def read_deletes(
-        self,
-        schema: StructType,
-        buckets: list[int] | None = None,
-        snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Scan a snapshot's equality-delete files (mor-del).
-        ``schema`` is caller-defined (key + LWW order columns + ``_seq``);
-        bucket pruning is sound because a key's delete entries bucket
-        identically to its data rows. Pass ``snapshot_id`` to pair the
-        delete list with a data ``read()`` of the SAME snapshot — two
-        independent current-snapshot reads can tear across a concurrent
-        commit (a newer delete masking an older file list)."""
-        if snapshot_id is None:
-            snap = self.current_snapshot()
-        else:
-            snap = Snapshot.from_json(
-                fs.read_text(os.path.join(self._snap_dir, f"v{snapshot_id:09d}.json"))
-            )
-        files = snap.delete_files
-        if buckets is not None:
-            bset = set(buckets)
-            # bucket-less entries (the coalesced narrow layout) are kept
-            # conservatively — the mask is narrow and broadcast-consumed
-            files = [f for f in files if f.get("bucket") is None or f["bucket"] in bset]
-        if not files:
-            return empty_df(self.spark, schema)
-        return _scan(self.spark, schema, [self._abs(f["path"]) for f in files])
-
     def schema(self) -> StructType:
         return self.current_snapshot().schema()
 
     # -- write ---------------------------------------------------------------
 
-    def _write_data_files(
-        self,
-        df: DataFrame,
-        snap: Snapshot,
-        cols: list[str] | None = None,
-    ) -> list[dict[str, Any]]:
+    def _write_data_files(self, df: DataFrame, snap: Snapshot) -> list[dict[str, Any]]:
         """Write df (already projected to table schema) as bucketed data files.
 
         The explicit repartition on (bucket(hash(bucket_cols)), salt) is the
@@ -490,14 +456,9 @@ class LakeTable:
         over `write_salt` concurrent write tasks instead of one fat straggler.
         The salt is a deterministic hash of the full key — retries salt
         identically (exactly-once safe), no rand().
-
-        ``cols`` overrides the projected column list (mor-del delta data
-        files carry the table schema plus ``_seq``). Equality-delete files
-        do NOT come through here — they use the coalesced narrow writer
-        (`_write_delete_files`).
         """
         out = os.path.join(self._data_dir, uuid.uuid4().hex)
-        cols = cols if cols is not None else [f.name for f in snap.schema().fields]
+        cols = [f.name for f in snap.schema().fields]
         use_day = snap.day_col is not None
         salt = F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]), F.lit(max(snap.write_salt, 1)))
         proj = df.select(
@@ -588,122 +549,12 @@ class LakeTable:
         self._commit(nxt)
         return nxt
 
-    def _write_delete_files(
-        self, deletes: DataFrame, cols: list[str]
-    ) -> list[dict[str, Any]]:
-        """Write an equality-delete frame as a FEW coalesced narrow files —
-        NOT through the salted/bucketed data writer. Delete entries are
-        keys + three ints, consumed whole by the read-side broadcast; the
-        first implementation bucketed+salted them like data (≈ buckets ×
-        salt tiny files per commit), which doubled the table's small-file
-        count and made mor-del reads SLOWER than the mor re-aggregate they
-        exist to replace (measured 2x at delta depth 24). Entries carry no
-        bucket id; read_deletes keeps them under bucket pruning
-        (conservative, same rule as day-less files). At warehouse scale,
-        size the coalesce by the landing row count instead of this
-        constant."""
-        import pyarrow.parquet as pq
-
-        out = os.path.join(self._data_dir, uuid.uuid4().hex)
-        _writer_view(deletes.select(*cols).coalesce(4)).write.parquet(
-            out, mode="overwrite"
-        )
-        entries = []
-        for fn in sorted(os.listdir(out)):
-            if fn.endswith(".parquet"):
-                p = os.path.join(out, fn)
-                entries.append({
-                    "path": os.path.relpath(p, self.path),
-                    "bucket": None,
-                    "rows": pq.ParquetFile(p).metadata.num_rows,
-                    # on-disk size feeds the read-side broadcast-vs-shuffle
-                    # decision (engine._mor_del_resolved) without a scan
-                    "bytes": os.path.getsize(p),
-                })
-        return entries
-
-    def append_with_deletes(
-        self,
-        df: DataFrame,
-        deletes: DataFrame,
-        delete_cols: list[str],
-        summary: dict[str, Any] | None = None,
-    ) -> Snapshot:
-        """Equality-delete delta commit (Iceberg v2 MOR shape): append ``df``
-        as data files AND ``deletes`` (key + LWW order columns) as
-        equality-delete files, atomically, stamping both with the commit's
-        sequence number ``_seq`` (= child snapshot id). Read-side masking
-        (engine.silver_resolved) hides any data row with a strictly-newer
-        delete entry — where "newer" is the LWW order tuple with ``_seq`` as
-        the final tiebreak, which is what makes a re-applied epoch's
-        duplicate rows collapse structurally (the newer commit's delete
-        entries mask the older commit's identical rows)."""
-        snap = self.current_snapshot()
-        seq = snap.snapshot_id + 1
-        data_cols = [f.name for f in snap.schema().fields]
-        new_files = self._write_data_files(
-            df.withColumn("_seq", F.lit(seq).cast("int")),
-            snap,
-            cols=data_cols + ["_seq"],
-        )
-        new_deletes = self._write_delete_files(
-            deletes.withColumn("_seq", F.lit(seq).cast("int")),
-            [c for c in delete_cols if c != "_seq"] + ["_seq"],
-        )
-        nxt = snap.child(
-            snap.files + new_files,
-            {"operation": "append", **(summary or {})},
-            delete_files=snap.delete_files + new_deletes,
-        )
-        self._commit(nxt)
-        return nxt
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        summary: dict[str, Any] | None = None,
-        deletes: DataFrame | None = None,
-        delete_cols: list[str] | None = None,
-    ) -> Snapshot:
+    def overwrite(self, df: DataFrame, summary: dict[str, Any] | None = None) -> Snapshot:
         """Full replace — the reference's WRITE_TRUNCATE sink
-        (``analysis.py:216-226``), as one atomic snapshot. Accumulated
-        equality-delete files are folded: cleared by default (the rewritten
-        base is already resolved), or REPLACED by ``deletes`` — the mor-del
-        compaction passes the retained per-key version guards here (see
-        engine.compact), already stamped with their ``_seq``."""
+        (``analysis.py:216-226``), as one atomic snapshot."""
         snap = self.current_snapshot()
         new_files = self._write_data_files(df, snap)
-        new_deletes: list[dict[str, Any]] = []
-        if deletes is not None:
-            new_deletes = self._write_delete_files(deletes, delete_cols)
-        nxt = snap.child(
-            new_files,
-            {"operation": "overwrite", **(summary or {})},
-            delete_files=new_deletes,
-        )
-        self._commit(nxt)
-        return nxt
-
-    def rewrite_delete_files(
-        self,
-        deletes: DataFrame,
-        delete_cols: list[str],
-        summary: dict[str, Any] | None = None,
-    ) -> Snapshot:
-        """Minor compaction of the equality-delete side (Iceberg's
-        rewrite-delete-files maintenance action): every data file is carried
-        forward untouched; the accumulated delete files are atomically
-        replaced by ``deletes`` (the caller passes the per-key collapsed
-        mask, ``_seq`` values preserved). Cost scales with the delete set,
-        never the table — the between-folds maintenance step that bounds
-        mor-del read cost without paying a base rewrite."""
-        snap = self.current_snapshot()
-        new_deletes = self._write_delete_files(deletes, delete_cols)
-        nxt = snap.child(
-            snap.files,
-            {"operation": "rewrite_deletes", **(summary or {})},
-            delete_files=new_deletes,
-        )
+        nxt = snap.child(new_files, {"operation": "overwrite", **(summary or {})})
         self._commit(nxt)
         return nxt
 
@@ -714,15 +565,6 @@ class LakeTable:
         ``buckets``, replace everything inside them with ``df``'s files.
         This is the commit primitive under MERGE (lake.merge.merge_into)."""
         snap = self.current_snapshot()
-        if snap.delete_files:
-            # a CoW bucket rewrite would reset rewritten rows' _seq to NULL
-            # while carried-forward delete entries keep theirs — an
-            # equal-LWW-tuple delete would then mask the rewritten winner
-            # (silent key loss). The modes are not meant to mix; fold first.
-            raise ValueError(
-                "replace_buckets on a table with equality-delete files is "
-                "not supported — compact() the mor-del table first"
-            )
         bset = set(buckets)
         new_files = self._write_data_files(df, snap)
         for f in new_files:
@@ -785,7 +627,7 @@ class LakeTable:
             )
             # canonicalize so the walk's paths compare equal regardless of
             # how the manifest stored them (relative/absolute/legacy);
-            # delete files are live table state too (mor-del)
+            # a legacy table's delete files are live table state too
             live.update(
                 os.path.abspath(self._abs(x["path"]))
                 for x in snap.files + snap.delete_files

@@ -569,9 +569,8 @@ def d06_simhash(spark: SparkSession, sf: str, bits: int | None = None) -> DataFr
         return hashed.groupBy("simhash").agg(
             F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_doc_id")
         )
-    # Bit source per width (sizing.py): widths ≤32 draw bit j from the high
-    # bit of hex nibble j+1 of md5(token) — the path the DuckDB oracle
-    # evaluates identically at gate widths. Widths >32 (corpora past ~2^33
+    # Widths ≤32 took the UDF path above (md5 bits, which the DuckDB oracle
+    # evaluates identically at gate widths). Widths >32 (corpora past ~2^33
     # docs) draw bit j of xxhash64(token) — a 64-bit JVM-side hash with no
     # Python in the loop; its pipeline is pinned by a pure-Python xxhash64
     # reimplementation + planted-collision/occupancy tests
@@ -598,20 +597,12 @@ def d06_simhash(spark: SparkSession, sf: str, bits: int | None = None) -> DataFr
     # the inline form produced (when(NULL).otherwise(-1)); non-null tokens
     # always match the vocabulary built from the same rows.
     vocab = tokens.select("t").distinct()
-    if bits <= 32:
-        vh = vocab.select("t", F.md5("t").alias("h"))
+    vh = vocab.select("t", F.xxhash64("t").alias("h"))
 
-        def bit_is_set(j: int):
-            return F.substring("h", j + 1, 1).isin(
-                "8", "9", "a", "b", "c", "d", "e", "f"
-            )
-    else:
-        vh = vocab.select("t", F.xxhash64("t").alias("h"))
-
-        def bit_is_set(j: int):
-            # arithmetic shiftright then &1 extracts bit j exactly for
-            # j ≤ 63 (sign extension never reaches the masked low bit)
-            return F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1
+    def bit_is_set(j: int):
+        # arithmetic shiftright then &1 extracts bit j exactly for
+        # j ≤ 63 (sign extension never reaches the masked low bit)
+        return F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1
 
     vbits = vh.select(
         "t",

@@ -33,15 +33,11 @@ def main() -> None:
                          "epochs//2. Pin it explicitly when resuming with a larger "
                          "--epochs so the generated corpus stays identical.")
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--merge-mode", choices=["cow", "mor", "mor-del"], default="cow",
-                    help="cow = copy-on-write MERGE (default); mor = merge-on-read "
-                         "delta append with read-time LWW resolve; mor-del = "
-                         "merge-on-read with equality-delete files (Iceberg v2 "
-                         "shape, read-time anti-join mask instead of re-aggregate)")
-    ap.add_argument("--deletefile-limit", type=int, default=None,
-                    help="mor-del only: run the delete-side minor compaction "
-                         "(Iceberg rewrite-delete-files) when this many delete "
-                         "files accumulate; default off")
+    ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow",
+                    help="cow = copy-on-write MERGE that rewrites the touched "
+                         "buckets (default); mor = merge-on-read delta append, "
+                         "LWW winners resolved at read time until compaction "
+                         "folds the deltas")
     ap.add_argument("--write-salt", type=int, default=4,
                     help="hot-bucket writer spread (see BENCH/skew_ab.py for "
                          "when this pays; 1 disables salting)")
@@ -86,7 +82,6 @@ def main() -> None:
         return CdcEngine(
             spark, args.warehouse, n_buckets=args.n_buckets,
             merge_mode=args.merge_mode, write_salt=args.write_salt,
-            mor_del_deletefile_limit=args.deletefile_limit,
             day_partition=args.day_partition,
         )
 

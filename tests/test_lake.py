@@ -277,8 +277,8 @@ def _assert_scan(spark, t, read, schema, files):
 def test_scan_plans_from_manifest_without_a_job(spark, cat):
     """A lake scan lists the manifest's files on the driver: no Spark job
     until it executes, even past the 32 paths where Spark's own reader
-    lists with a job. Pruning, time travel, hidden extra fields and
-    typed-NULL evolution padding read the same rows as a plain scan."""
+    lists with a job. Pruning, time travel and typed-NULL evolution
+    padding read the same rows as a plain scan."""
     t = cat.create_table("ns.tscan", SCHEMA, key_cols=["k", "seq"], n_buckets=40)
     t.append(mk(spark, [(f"k{i}", i, "v", "I", i) for i in range(400)]))
     v1 = t.current_snapshot()
@@ -299,9 +299,6 @@ def test_scan_plans_from_manifest_without_a_job(spark, cat):
                  [f for f in snap.files if f["bucket"] in keep])
     _assert_scan(spark, t, lambda: t.read(snapshot_id=v1.snapshot_id),
                  v1.schema(), v1.files)
-    seq = StructField("_seq", IntegerType(), True)
-    _assert_scan(spark, t, lambda: t.read(extra_fields=[seq]),
-                 StructType([*s2.fields, seq]), snap.files)
     # evolution padding: the pre-ADD COLUMN rows read a typed NULL
     assert t.read().filter(F.col("extra").isNull()).count() == 400
 
@@ -310,31 +307,22 @@ def test_scan_plans_from_manifest_without_a_job(spark, cat):
     assert spark._lake_writer_session.conf.get(DISCOVERY) == str(2**31 - 1)
 
 
-def test_delete_scan_plans_from_manifest_without_a_job(spark, cat):
-    """mor-del: the data read of an equality-delete table and its
-    read_deletes() start no Spark job either, bucket-pruned or not."""
-    t = cat.create_table("ns.tdel", SCHEMA, key_cols=["k", "seq"], n_buckets=40)
-    seq = StructField("_seq", IntegerType(), True)
-    del_schema = StructType([*SCHEMA.fields, seq])
-    cols = [f.name for f in SCHEMA.fields]
-    for c in range(9):  # up to 4 delete files a commit: past 32 in all
+def test_delta_scan_plans_from_manifest_without_a_job(spark, cat):
+    """A merge-on-read table, whose delta appends keep every version of a
+    key until a compaction folds them, plans its scans from the manifest
+    too: no Spark job, whole, bucket-pruned or time-travelled."""
+    t = cat.create_table("ns.tdelta", SCHEMA, key_cols=["k", "seq"], n_buckets=40)
+    for c in range(9):  # the same 100 keys in every delta
         rows = [(f"k{i}", i, f"v{c}", "U", 10 * c + i) for i in range(100)]
-        t.append_with_deletes(mk(spark, rows), mk(spark, rows), cols)
+        t.append(mk(spark, rows), summary={"mode": "mor_delta"})
         if c == 0:
             first = t.current_snapshot()
     snap = t.current_snapshot()
-    assert len(snap.delete_files) > 32 and len(snap.files) > 32
+    assert len(snap.files) > 32 and snap.delete_files == []
 
-    # data files carry the table schema plus _seq, like the delete files
-    _assert_scan(spark, t, lambda: t.read(extra_fields=[seq]), del_schema,
-                 snap.files)
-    _assert_scan(spark, t, lambda: t.read_deletes(del_schema), del_schema,
-                 snap.delete_files)
-    # bucket-less delete entries survive pruning (read_deletes docstring)
-    _assert_scan(spark, t, lambda: t.read_deletes(del_schema, buckets=[3]),
-                 del_schema, snap.delete_files)
-    _assert_scan(
-        spark, t,
-        lambda: t.read_deletes(del_schema, snapshot_id=first.snapshot_id),
-        del_schema, first.delete_files,
-    )
+    _assert_scan(spark, t, t.read, SCHEMA, snap.files)
+    _assert_scan(spark, t, lambda: t.read(buckets=[3]), SCHEMA,
+                 [f for f in snap.files if f["bucket"] == 3])
+    _assert_scan(spark, t, lambda: t.read(snapshot_id=first.snapshot_id),
+                 SCHEMA, first.files)
+    assert t.read().count() == 900

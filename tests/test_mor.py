@@ -37,9 +37,6 @@ def oracle_pdf() -> pd.DataFrame:
     return want[COLS].reset_index(drop=True)
 
 
-MODES = ["mor", "mor-del"]  # re-aggregate resolve vs equality-delete mask
-
-
 def mor_engine(spark, tmp_path, name, mode="mor") -> CdcEngine:
     eng = CdcEngine(spark, str(tmp_path / name), n_buckets=4, write_salt=2,
                     merge_mode=mode)
@@ -49,7 +46,7 @@ def mor_engine(spark, tmp_path, name, mode="mor") -> CdcEngine:
     return eng
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["mor"])
 def test_mor_replay_parity_epoch_at_a_time(spark, tmp_path, mode):
     eng = mor_engine(spark, tmp_path, "wh_mor", mode)
     metrics = eng.replay(catchup=False)
@@ -57,20 +54,18 @@ def test_mor_replay_parity_epoch_at_a_time(spark, tmp_path, mode):
     pd.testing.assert_frame_equal(silver_pdf(eng), oracle_pdf(), check_dtype=False)
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["mor"])
 def test_mor_catchup_parity(spark, tmp_path, mode):
     eng = mor_engine(spark, tmp_path, "wh_mor_catchup", mode)
     eng.replay(catchup=True)
     pd.testing.assert_frame_equal(silver_pdf(eng), oracle_pdf(), check_dtype=False)
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["mor"])
 def test_mor_reapplied_epoch_is_logical_noop(spark, tmp_path, mode):
     """Torn commit under MOR: re-appending an epoch's delta adds duplicate
-    physical rows that are a logical no-op — under "mor" the identical
-    (key, lsn, op) rows tie in the read-side LWW resolve; under "mor-del"
-    the retry commit's delete entries mask the earlier commit's identical
-    rows via the _seq tiebreak (exactly one physical winner)."""
+    physical rows that are a logical no-op — the identical (key, lsn, op)
+    rows tie in the read-side LWW resolve."""
     import os
 
     eng = mor_engine(spark, tmp_path, "wh_mor_crash", mode)
@@ -86,7 +81,7 @@ def test_mor_reapplied_epoch_is_logical_noop(spark, tmp_path, mode):
     pd.testing.assert_frame_equal(silver_pdf(eng2), want)
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["mor"])
 def test_mor_compact_folds_deltas(spark, tmp_path, mode):
     eng = mor_engine(spark, tmp_path, "wh_mor_compact", mode)
     eng.replay(catchup=False)
@@ -116,7 +111,7 @@ def test_mor_compact_folds_deltas(spark, tmp_path, mode):
     assert len(got) == 1 and got[0].text == "post-compact patch"
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["mor"])
 def test_mor_incremental_gold_matches_full_rebuild(spark, tmp_path, mode):
     """Incremental gold over a MOR silver reads bucket-pruned deltas+base
     through silver_resolved; the result must equal the full-refresh plans."""
@@ -143,7 +138,7 @@ def test_mor_incremental_gold_matches_full_rebuild(spark, tmp_path, mode):
         pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=table)
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["mor"])
 def test_autocompact_policy_bounds_delta_depth(spark, tmp_path, mode):
     """With mor_autocompact_deltas=N, replay folds the deltas once N commits
     stack up — the depth stays bounded and parity is untouched."""
@@ -183,15 +178,13 @@ def test_autocompact_disabled_accumulates(spark, tmp_path):
     pd.testing.assert_frame_equal(silver_pdf(eng), oracle_pdf(), check_dtype=False)
 
 
-def test_mor_del_stale_redelivery_after_compact(spark, tmp_path):
-    """The bug the retained version guards exist for: after a compaction
-    fold, a stale redelivery (old lsn for a key whose newer winner now
-    lives only in the base) arrives in a later epoch. Under "mor" the
-    read-side LWW re-ranks it away; under "mor-del" only the retained
-    per-key delete guard can mask it — without guards the stale row
-    resurfaces (observed: 2 duplicate keys in the autocompact run)."""
-    eng = CdcEngine(spark, str(tmp_path / "wh_mdstale"), n_buckets=4,
-                    write_salt=2, merge_mode="mor-del",
+def test_mor_stale_redelivery_after_compact(spark, tmp_path):
+    """After a compaction fold, a stale redelivery (old lsn for a key whose
+    newer winner now lives only in the base) arrives in a later epoch as a
+    delta. The read-side LWW resolve must rank it below the base winner:
+    the key keeps one row, the winner's."""
+    eng = CdcEngine(spark, str(tmp_path / "wh_mor_stale"), n_buckets=4,
+                    write_salt=2, merge_mode="mor",
                     mor_autocompact_deltas=None)
     eng.init_tables()
     for e in range(CFG.n_epochs):
@@ -201,7 +194,7 @@ def test_mor_del_stale_redelivery_after_compact(spark, tmp_path):
     key = want.iloc[0]
     assert key.lsn > 1  # a stale lsn below the winner exists
 
-    eng.compact()  # fold deltas; guards must survive the fold
+    eng.compact()  # fold deltas: the winner now lives only in the base
 
     e = CFG.n_epochs
     stale = pd.DataFrame(
@@ -225,104 +218,25 @@ def test_mor_del_stale_redelivery_after_compact(spark, tmp_path):
     pd.testing.assert_frame_equal(silver_pdf(eng), want)
 
 
-def test_replace_buckets_refuses_mor_del_table(spark, tmp_path):
-    """CoW bucket rewrites reset rewritten rows' _seq while carried-forward
-    delete entries keep theirs — an equal-tuple delete would then mask the
-    rewritten winner (silent key loss). The table must refuse instead."""
-    eng = CdcEngine(spark, str(tmp_path / "wh_md_rb"), n_buckets=4,
-                    write_salt=1, merge_mode="mor-del",
-                    mor_autocompact_deltas=None)
+def test_legacy_delete_files_refuse_reads(spark, tmp_path):
+    """A snapshot that still lists equality-delete files (written by the
+    removed "mor-del" mode) must refuse reads: the data files alone hold
+    superseded row versions that only those files masked. Later commits
+    carry the list forward, so the refusal cannot be lost by appending."""
+    with pytest.raises(ValueError, match="'cow' or 'mor'"):
+        CdcEngine(spark, str(tmp_path / "wh_bad"), merge_mode="mor-del")
+
+    eng = CdcEngine(spark, str(tmp_path / "wh_legacy"), n_buckets=4,
+                    write_salt=1, merge_mode="mor")
     eng.init_tables()
-    eng.ingest_epoch_pandas(generate_epoch(CFG, 0), 0)
-    eng.replay(catchup=False)
-    assert eng.silver.current_snapshot().delete_files
-    with pytest.raises(ValueError, match="equality-delete"):
-        eng.silver.replace_buckets(eng.silver.read(), [0, 1, 2, 3])
-
-
-def test_mor_del_refuses_mor_written_deltas(spark, tmp_path):
-    """Switching a live 'mor' warehouse to 'mor-del' must fail loudly while
-    un-folded mor deltas exist: they carry no equality-delete entries, so
-    the anti-join resolve would silently return every superseded version as
-    a duplicate row. After compact() folds them, the switch is legal."""
-    wh = str(tmp_path / "wh_modeswitch")
-    eng = CdcEngine(spark, wh, n_buckets=4, write_salt=1, merge_mode="mor",
-                    mor_autocompact_deltas=None)
-    eng.init_tables()
-    for e in range(2):
-        eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
-    eng.replay(catchup=False)
-    assert eng.mor_delta_depth() > 0
-    eng2 = CdcEngine(spark, wh, n_buckets=4, write_salt=1,
-                     merge_mode="mor-del", mor_autocompact_deltas=None)
-    with pytest.raises(ValueError, match="compact"):
-        eng2.silver_resolved()
-    # folding the deltas under 'mor' makes the same switch legal (base-only
-    # table: nothing left for the delete mask to miss)
-    eng.compact()
-    assert eng2.silver_view().count() > 0
-
-
-def test_mor_del_compact_deletes_is_read_equivalent(spark, tmp_path):
-    """The delete-side minor compaction (Iceberg rewrite-delete-files):
-    collapses the accumulated delete files to one per-key max-tuple entry
-    set, data files untouched. Read results must be bit-identical, the
-    delta depth must NOT reset (no data fold happened), and a stale
-    redelivery landing AFTER the rewrite must still be masked."""
-    eng = CdcEngine(spark, str(tmp_path / "wh_mdcd"), n_buckets=4,
-                    write_salt=2, merge_mode="mor-del",
-                    mor_autocompact_deltas=None)
-    eng.init_tables()
-    for e in range(CFG.n_epochs):
-        eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
-    eng.replay(catchup=False)
-    want = silver_pdf(eng)
-    depth = eng.mor_delta_depth()
-    before = eng.silver.current_snapshot().delete_files
-    assert depth > 0 and len(before) > 1
-
-    info = eng.compact_deletes()
-    assert info["delete_files_after"] < info["delete_files_before"]
-    # un-folded deltas stay visible to the depth walk and eqdel validation
-    assert eng.mor_delta_depth() == depth
-    pd.testing.assert_frame_equal(silver_pdf(eng), want)
-
-    # stale redelivery after the rewrite: the collapsed per-key guard (its
-    # real lsn/_seq preserved) must still mask it
-    key = want.iloc[0]
-    assert key.lsn > 1
-    e = CFG.n_epochs
-    stale = pd.DataFrame(
-        {
-            "lsn": [int(key.lsn) - 1], "op": ["U"], "conv_id": [key.conv_id],
-            "turn_idx": [int(key.turn_idx)], "role": ["user"],
-            "text": ["stale redelivery"], "tool": [None],
-            "ts": pd.to_datetime(["2024-06-01 10:00:00"]),
-            "schema_version": [2], "partition_id": [0], "checkpoint_epoch": [e],
-        }
-    )
-    eng.ingest_epoch_pandas(stale, e)
-    eng.replay(catchup=False)
-    got = eng.silver_view().filter(
-        f"conv_id = '{key.conv_id}' AND turn_idx = {int(key.turn_idx)}"
-    ).collect()
-    assert len(got) == 1 and got[0].lsn == key.lsn
-    pd.testing.assert_frame_equal(silver_pdf(eng), want)
-
-
-def test_mor_del_deletefile_limit_policy(spark, tmp_path):
-    """replay() housekeeping runs the minor compaction once the delete file
-    count crosses the policy limit, keeping the file count bounded while
-    parity holds and the delta depth keeps accumulating (no data fold)."""
-    eng = CdcEngine(spark, str(tmp_path / "wh_mdpol"), n_buckets=4,
-                    write_salt=2, merge_mode="mor-del",
-                    mor_autocompact_deltas=None, mor_del_deletefile_limit=6)
-    eng.init_tables()
-    for e in range(CFG.n_epochs):
-        eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
-        eng.replay(catchup=False)
     snap = eng.silver.current_snapshot()
-    assert len(snap.delete_files) <= 6 + 4  # bounded: limit + one commit's files
-    assert eng.mor_delta_depth() == CFG.n_epochs
-    assert any("compact_deletes" in m for m in eng.metrics())
-    pd.testing.assert_frame_equal(silver_pdf(eng), oracle_pdf())
+    legacy = snap.child(snap.files, {"operation": "append", "mode": "mor_delta"})
+    legacy.delete_files = [{"path": "data/x/part-0.parquet", "bucket": None,
+                            "rows": 1}]
+    eng.silver._commit(legacy)
+
+    with pytest.raises(ValueError, match="equality-delete files"):
+        eng.silver.read()
+    with pytest.raises(ValueError, match="equality-delete files"):
+        eng.silver_view()
+    assert legacy.child(legacy.files, {}).delete_files == legacy.delete_files

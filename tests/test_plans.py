@@ -128,47 +128,6 @@ def test_silver_merge_reads_prune_buckets(spark, tmp_path):
     assert all("_bucket=0" in f or "_bucket=1" in f for f in files)
 
 
-def test_mor_del_resolve_is_broadcast_antijoin_no_aggregate(spark, tmp_path):
-    """The mor-del selling point, enforced on the actual plan: the resolved
-    read must be ONE broadcast anti-join probe over the data files — no
-    HashAggregate (the "mor" full-table max_by) and no shuffled join of the
-    row payloads. A regression to either shape silently reintroduces the
-    whole-table read cost the delete files exist to remove."""
-    import pandas as pd
-
-    from citibike_pipeline_spark.cdc import CdcEngine
-    from citibike_pipeline_spark.cdc.generator import GenConfig, generate_epoch
-
-    cfg = GenConfig(n_convs=30, n_epochs=2, events_per_epoch=800,
-                    evolution_epoch=3)
-    eng = CdcEngine(spark, str(tmp_path / "wh_plan_md"), n_buckets=4,
-                    write_salt=1, merge_mode="mor-del",
-                    mor_autocompact_deltas=None)
-    eng.init_tables()
-    for e in range(cfg.n_epochs):
-        eng.ingest_epoch_pandas(generate_epoch(cfg, e), e)
-    eng.replay(catchup=False)
-
-    plan = _plan(eng.silver_resolved())
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:2000]
-    # the only aggregate allowed is the per-key collapse of the NARROW
-    # delete frame (partial+final over keys + 3 ints) feeding the broadcast
-    # — the table-side payloads must reach the anti-join unaggregated and
-    # unshuffled
-    assert plan.count("HashAggregate") <= 2, "unexpected table-side aggregate"
-    assert "SortMergeJoin" not in plan, "delete mask must broadcast, not shuffle"
-    # the aggregate (if planned) sits under the BroadcastExchange, i.e. on
-    # the delete side, not above the data scan. In the physical tree the
-    # STREAMED (data) side prints before the build side, so any aggregate
-    # appearing before the exchange would be on the table side — the exact
-    # regression this test forbids.
-    phys = plan[plan.index("== Physical Plan =="):]
-    bx = phys.find("BroadcastExchange")
-    ha = phys.find("HashAggregate")
-    assert bx != -1, phys[:2000]
-    assert ha == -1 or ha > bx, "table-side aggregate above the data scan"
-
-
 def test_e10_fine_search_broadcasts_probe_set(spark, sf_dir):
     """IVF fine search: the tiny probed-list set must broadcast against the
     corpus side; a shuffle join here would move the whole corpus per query
