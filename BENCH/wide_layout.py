@@ -42,7 +42,7 @@ def snapshot_stats(eng: CdcEngine) -> dict:
 
 def build(spark, wh: str, cfg: GenConfig) -> CdcEngine:
     shutil.rmtree(wh, ignore_errors=True)
-    eng = CdcEngine(spark, wh, n_buckets=1024, write_salt=2, day_partition=True)
+    eng = CdcEngine(spark, wh, n_buckets=1024, day_partition=True)
     eng.init_tables()
     return eng
 

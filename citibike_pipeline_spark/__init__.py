@@ -7,7 +7,7 @@ idiomatic Spark DataFrame/SQL engine:
 - bronze/silver/gold lake tables with atomic snapshot commits (``lake``)
 - WAL/binlog-tail CDC replay with LSN last-writer-wins dedup, keyed MERGE,
   exactly-once commit manifests, checkpoint/resume, schema evolution,
-  hot-key skew salting (``cdc``)
+  hot-conversation skew spread by the full-key resolve exchange (``cdc``)
 - the reference's full relational operator surface re-expressed Spark-first
   (``operators``), plus training-data-pipeline ops: dedup (exact/MinHash/
   SimHash/Jaccard/embedding), similarity search, text analysis, multimodal

@@ -1,7 +1,7 @@
 """CDC / incremental-ingest core: WAL-tail -> bronze -> silver -> gold.
 
 The graft's heart (SURVEY.md §2.9): change events keyed (conv_id, turn_idx),
-deduplicated last-writer-wins over monotone LSNs, applied via salted
+deduplicated last-writer-wins over monotone LSNs, applied via a bucketed
 key-partitioned MERGE with exactly-once commit manifests keyed
 (checkpoint_epoch, partition_id), resumable from any checkpoint, with
 schema evolution handled in-place.

@@ -5,10 +5,10 @@ The exact idiom of the reference's snapshot collapse — ROW_NUMBER() over
 (``silver_stations.sql:46-54``) — with LSN as the offset and the documented
 (lsn, OP_RANK) total order for ties (SURVEY.md §7.3 hard-part b/c).
 
-Skew note: the window clusters on the FULL key (conv_id, turn_idx), so a hot
-conversation's events hash-spread across turn_idx — conversation-level skew
-does not concentrate here. Conversation-level salting (cdc.skew) is applied
-where grouping is by conv_id alone.
+Skew note: both resolves exchange on the FULL key (conv_id, turn_idx), so a
+hot conversation's events hash-spread across turn_idx — conversation-level
+skew does not concentrate in the resolve. That full-key exchange is the
+engine's skew handling; AQE's skew-join covers the join side.
 """
 
 from __future__ import annotations

@@ -15,8 +15,8 @@ Per-epoch dataflow (`apply_epoch`)::
       |                                           shuffle (map-side partial
       |                                           collapse; a sort aggregate,
       |                                           see cdc.dedup.lww_dedup_agg),
-      |                                           then the salted bucketed
-      |                                           write on hash(conv_id)
+      |                                           then the bucketed write on
+      |                                           hash(conv_id)
       |> write commit manifests (epoch, partition_id) + lineage stats
       |                                           (stats recorded at landing)
       |> advance checkpoint, append metrics
@@ -25,14 +25,17 @@ Shuffle accounting (scale design): exactly ONE key shuffle per merge — the
 LWW-resolve max_by aggregate over (target ∪ events) on the full
 (conv_id, turn_idx) key, with map-side partial aggregation collapsing
 duplicates BEFORE the exchange (shuffle volume scales with distinct keys,
-not events) — plus the salted write repartition (hash(conv_id) buckets, hot
-conversations spread over `write_salt` tasks by a deterministic key-hash
-salt; see lake.table._write_data_files). The resolve is one shuffle but not
-sort-free: the payload struct holds strings, so each side of its exchange
-sorts for a sort aggregate. A separate pre-dedup pass would
-be pure overhead: winner-of-winners equals the global winner. The
-aggregate's hash exchange on the full key spreads hot conversations across
-turn_idx.
+not events) — plus the write repartition on the bucket (hash(conv_id)): one
+file per touched bucket (per day, on day-partitioned tables) per commit; see
+lake.table._write_data_files. The resolve is one shuffle but not sort-free:
+the payload struct holds strings, so each side of its exchange sorts for a
+sort aggregate. A separate pre-dedup pass would be pure overhead:
+winner-of-winners equals the global winner.
+
+Skew: the resolve's hash exchange on the FULL key (conv_id, turn_idx)
+spreads a hot conversation's turns over tasks, and AQE's skew-join covers
+the join side. The write keeps a hot conversation's bucket in one task and
+one file.
 
 Exactly-once: two complementary mechanisms.
 1. Commit manifests keyed (checkpoint_epoch, partition_id) — written after the
@@ -68,7 +71,6 @@ from ..sources.bronze import BronzeLog
 from .dedup import lww_dedup_agg, op_rank_col
 from .reconcile import reconcile_to_schema
 from .schemas import EVENT_SCHEMA_V1, KEY_COLS
-from .skew import detect_hot_keys
 
 # Event columns that are WAL metadata, not part of the silver entity payload.
 _EVENT_META = {"schema_version", "partition_id", "checkpoint_epoch"}
@@ -86,8 +88,6 @@ class CdcEngine:
         spark: SparkSession,
         warehouse: str,
         n_buckets: int = 32,
-        write_salt: int = 4,
-        hot_key_threshold: int = 50_000,
         merge_mode: str = "cow",
         mor_autocompact_deltas: int | None = 16,
         day_partition: bool = False,
@@ -103,13 +103,11 @@ class CdcEngine:
         # SURVEY §4 partition spec at full width: days(ts) × bucket(conv_id).
         # The day axis prunes time-scoped analytics + retention; the bucket
         # axis prunes key-scoped merges. Off by default for tiny epochs
-        # (days × buckets × salt small-file pressure); turn on at scale.
+        # (days × buckets small-file pressure); turn on at scale.
         self.day_partition = day_partition
         self.warehouse = warehouse
         self.catalog = LakeCatalog(spark, warehouse)
         self.n_buckets = n_buckets
-        self.write_salt = write_salt
-        self.hot_key_threshold = hot_key_threshold
         self._meta = os.path.join(warehouse, "_meta")
         self._manifest_dir = os.path.join(self._meta, "manifests")
         self._metrics_dir = os.path.join(self._meta, "metrics")
@@ -133,7 +131,6 @@ class CdcEngine:
                 # stays the full key.
                 bucket_cols=["conv_id"],
                 n_buckets=self.n_buckets,
-                write_salt=self.write_salt,
                 day_col="ts" if self.day_partition else None,
             )
 
@@ -357,19 +354,6 @@ class CdcEngine:
             return n_events < self.n_buckets * 20_000
         return n_events * 4 < table_rows
 
-    def _detect_hot_sampled(self, events: DataFrame, n_events: int) -> list[str]:
-        """Hot-conversation detection on a sample: at 10^7+ events an exact
-        count costs a full pass; a deterministic-seed sample bounds the scan
-        at ~2M rows and a >threshold key is detected with near-certainty."""
-        cap = 2_000_000
-        if n_events <= cap:
-            return detect_hot_keys(events, threshold=self.hot_key_threshold)
-        frac = cap / n_events
-        return detect_hot_keys(
-            events.sample(fraction=frac, seed=7),
-            threshold=max(int(self.hot_key_threshold * frac), 10),
-        )
-
     def _epoch_part_stats(self, epoch: int, done: set[int]) -> list[dict]:
         """Per-partition offset stats for the uncommitted partitions of one
         epoch. Prefers the stats the WAL recorded at landing time — replay
@@ -394,18 +378,6 @@ class CdcEngine:
             for st in parts
             if int(st["partition_id"]) not in done
         ]
-
-    def _hot_from_landing(self, epochs: list[int]) -> list[str] | None:
-        """Hot conversations from landing-time top-conv stats (no scan).
-        Returns None if any epoch lacks them (caller falls back to sampling)."""
-        totals: dict[str, int] = {}
-        for e in epochs:
-            rec = self.bronze.epoch_stats(e)
-            if rec is None or rec.get("top_convs") is None:
-                return None
-            for t in rec["top_convs"]:
-                totals[t["conv_id"]] = totals.get(t["conv_id"], 0) + int(t["n"])
-        return [c for c, n in totals.items() if n > self.hot_key_threshold]
 
     def apply_epoch(self, epoch: int) -> dict:
         """Apply one epoch's change events to silver. Returns metrics dict."""
@@ -443,12 +415,6 @@ class CdcEngine:
             silver.add_columns([StructField(f.name, f.dataType, True) for f in new_payload])
             silver = self.silver  # reload snapshot
 
-        # observability: hot conversations in this epoch (metrics only; the
-        # write salt is the table's fixed write_salt)
-        hot = self._hot_from_landing([epoch])
-        if hot is None:
-            hot = self._detect_hot_sampled(events, n_events)
-
         # No pre-dedup pass: the LWW merge resolver aggregates over
         # (target ∪ changes) anyway, and winner-of-winners equals the global
         # winner — pre-deduplicating would add a full extra shuffle+sort of
@@ -478,7 +444,6 @@ class CdcEngine:
             "buckets_touched": stats["buckets_touched"],
             "buckets_precomputed": bool(stats.get("buckets_precomputed", False)),
             "sec_touched_collect": stats.get("sec_touched_collect"),
-            "hot_convs": hot,
             "snapshot_id": stats["snapshot_id"],
             "wall_sec": wall,
             "events_per_sec": n_events / wall if wall > 0 else None,
@@ -538,12 +503,6 @@ class CdcEngine:
             silver.add_columns([StructField(f.name, f.dataType, True) for f in new_payload])
             silver = self.silver
 
-        _t = time.time()
-        hot = self._hot_from_landing(epochs)
-        if hot is None:
-            hot = self._detect_hot_sampled(events, n_events)
-        phases["hot_detect"] = round(time.time() - _t, 2)
-
         # no pre-dedup: the LWW resolver's aggregate subsumes it (see apply_epoch)
         changes = events.withColumn("ingest_epoch", F.col("checkpoint_epoch"))
         changes = reconcile_to_schema(
@@ -571,7 +530,6 @@ class CdcEngine:
             "partitions": len(part_stats),
             "buckets_touched": stats["buckets_touched"],
             "buckets_precomputed": bool(stats.get("buckets_precomputed", False)),
-            "hot_convs": hot,
             "snapshot_id": stats["snapshot_id"],
             "wall_sec": wall,
             "events_per_sec": n_events / wall if wall > 0 else None,
@@ -788,7 +746,7 @@ class CdcEngine:
         """Per-apply observability as a queryable TABLE (north-star "metrics
         tables" companion to lineage_df): the stable numeric core of every
         recorded apply — epoch, volume, bucket pruning, snapshot, wall.
-        Variable payloads (hot-conv lists, autocompact details) stay in the
+        Variable payloads (phase timings, autocompact details) stay in the
         raw ``metrics()`` JSON."""
         schema_ddl = (
             "epoch int, events_read long, partitions int, buckets_touched int, "

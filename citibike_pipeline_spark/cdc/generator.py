@@ -15,7 +15,7 @@ Event-log properties injected per FIXTURES.md F2 (each is a test dimension):
 4. delete-then-reinsert sequences                   -> final-op-wins
 5. LSN ties on distinct ops                         -> (lsn, OP_RANK) order
 6. schema evolution at `evolution_epoch`            -> v1 lacks `tool`
-7. hot-conversation skew                            -> salting / AQE
+7. hot-conversation skew                            -> full-key resolve exchange / AQE
 8. (checkpoint_epoch, partition_id) lineage stamps  -> manifests
 """
 

@@ -35,7 +35,6 @@ class LakeCatalog:
         key_cols: list[str],
         n_buckets: int = 32,
         bucket_cols: list[str] | None = None,
-        write_salt: int = 4,
         if_not_exists: bool = False,
         day_col: str | None = None,
     ) -> LakeTable:
@@ -46,7 +45,7 @@ class LakeCatalog:
                 return t
             raise ValueError(f"table {name} already exists at {path}")
         return LakeTable.create(
-            self.spark, path, schema, key_cols, n_buckets, bucket_cols, write_salt,
+            self.spark, path, schema, key_cols, n_buckets, bucket_cols,
             day_col=day_col,
         )
 

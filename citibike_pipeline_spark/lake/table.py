@@ -129,7 +129,7 @@ def _writer_view(df: DataFrame) -> DataFrame:
     AQE disabled, leaving the caller's session untouched.
 
     Why: lake writes size their partitions explicitly (shuffle_partitions +
-    bucket/salt repartition + hot-key salting), so adaptive re-planning buys
+    a repartition on the partition columns), so adaptive re-planning buys
     nothing and costs a measurable serial driver pause at every stage
     boundary (~0.4-0.7 s per merge at local[8]).
     """
@@ -188,7 +188,6 @@ class Snapshot:
     key_cols: list[str]          # merge identity (e.g. conv_id, turn_idx)
     n_buckets: int
     bucket_cols: list[str] = None  # layout/locality key (e.g. conv_id alone)
-    write_salt: int = 4          # hot-bucket write spread (skew splitting)
     day_col: str | None = None   # time-partition dimension (Iceberg days(ts))
     files: list[dict[str, Any]] = field(default_factory=list)  # {path, bucket[, day]}
     # Equality-delete files of the removed "mor-del" merge mode. No commit
@@ -220,7 +219,6 @@ class Snapshot:
             key_cols=self.key_cols,
             n_buckets=self.n_buckets,
             bucket_cols=self.bucket_cols,
-            write_salt=self.write_salt,
             day_col=self.day_col,
             files=files,
             delete_files=self.delete_files,
@@ -236,7 +234,6 @@ class Snapshot:
                 "key_cols": self.key_cols,
                 "n_buckets": self.n_buckets,
                 "bucket_cols": self.bucket_cols,
-                "write_salt": self.write_salt,
                 "day_col": self.day_col,
                 "files": self.files,
                 "delete_files": self.delete_files,
@@ -247,6 +244,9 @@ class Snapshot:
 
     @staticmethod
     def from_json(s: str) -> "Snapshot":
+        # keys this build no longer models are ignored: older manifests
+        # carry the removed per-bucket write spread, which never changed
+        # which rows a read returns
         d = json.loads(s)
         return Snapshot(
             snapshot_id=d["snapshot_id"],
@@ -254,7 +254,6 @@ class Snapshot:
             key_cols=d["key_cols"],
             n_buckets=d["n_buckets"],
             bucket_cols=d.get("bucket_cols"),
-            write_salt=d.get("write_salt", 4),
             day_col=d.get("day_col"),
             files=d["files"],
             delete_files=d.get("delete_files", []),
@@ -283,7 +282,6 @@ class LakeTable:
         key_cols: list[str],
         n_buckets: int = 32,
         bucket_cols: list[str] | None = None,
-        write_salt: int = 4,
         day_col: str | None = None,
     ) -> "LakeTable":
         t = LakeTable(spark, path)
@@ -295,7 +293,6 @@ class LakeTable:
             key_cols=key_cols,
             n_buckets=n_buckets,
             bucket_cols=bucket_cols,
-            write_salt=write_salt,
             day_col=day_col,
             files=[],
             summary={"operation": "create"},
@@ -450,17 +447,16 @@ class LakeTable:
     def _write_data_files(self, df: DataFrame, snap: Snapshot) -> list[dict[str, Any]]:
         """Write df (already projected to table schema) as bucketed data files.
 
-        The explicit repartition on (bucket(hash(bucket_cols)), salt) is the
-        north-rule's "salted key-partitioned" write: each bucket's data is
-        clustered for locality, and a hot bucket (hot conversation) spreads
-        over `write_salt` concurrent write tasks instead of one fat straggler.
-        The salt is a deterministic hash of the full key — retries salt
-        identically (exactly-once safe), no rand().
+        The explicit repartition on the partition columns (the bucket
+        hash(bucket_cols), plus the day on day-partitioned tables) sends each
+        partition's rows to one task, so a commit writes at most one file per
+        touched partition: the file count follows from the data, not a knob.
+        The repartition is deterministic, so a retried write lays out the
+        same files.
         """
         out = os.path.join(self._data_dir, uuid.uuid4().hex)
         cols = [f.name for f in snap.schema().fields]
         use_day = snap.day_col is not None
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]), F.lit(max(snap.write_salt, 1)))
         proj = df.select(
             *cols, bucket_expr(snap.bucket_cols, snap.n_buckets).alias(BUCKET_COL)
         )
@@ -475,7 +471,7 @@ class LakeTable:
         # _writer_view): the shared session's conf is never touched, so a
         # concurrent analytics query can never observe adaptive=false.
         (
-            _writer_view(proj.repartition(*[F.col(c) for c in part_cols], salt))
+            _writer_view(proj.repartition(*[F.col(c) for c in part_cols]))
             .write.partitionBy(*part_cols)
             .parquet(out, mode="overwrite")
         )
@@ -483,7 +479,7 @@ class LakeTable:
 
         # Iceberg-style DataFile stats: record count from the parquet footer
         # at commit time, so row counts are a manifest lookup, never a table
-        # scan. Footer reads are O(files-per-commit) = days × buckets × salt,
+        # scan. Footer reads are O(files-per-commit) = days × buckets,
         # driver-side. Paths are stored RELATIVE to the table root so the
         # warehouse can be relocated / mirrored unchanged.
         def file_entry(p: str, bucket: int, day: str | None) -> dict[str, Any]:

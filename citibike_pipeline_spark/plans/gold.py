@@ -227,7 +227,6 @@ def _ensure_table(engine, name: str, df: DataFrame):
             key_cols=_GOLD_SPECS[name]["keys"],
             bucket_cols=_GOLD_SPECS[name]["bucket"],
             n_buckets=8,
-            write_salt=1,
         )
     return engine.catalog.load_table(name)
 

@@ -50,7 +50,8 @@ def get_spark(
         builder
         # Adaptive execution: runtime coalescing of small shuffle partitions and
         # skew-join splitting — the engine's answer to hot conversations on the
-        # join side (salting handles the groupBy/window side, cdc.skew).
+        # join side (the LWW resolve's full-key exchange spreads them on the
+        # aggregate side, cdc.dedup).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

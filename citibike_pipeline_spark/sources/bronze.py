@@ -89,17 +89,7 @@ class BronzeLog:
             )
             .collect()
         ]
-        # top conversations by event count — the skew signal the engine needs
-        # for hot-key salting, known at landing time like the offsets
-        top = [
-            r.asDict()
-            for r in landed.groupBy("conv_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"))
-            .limit(20)
-            .collect()
-        ]
-        stats: dict = {"partitions": parts, "top_convs": top}
+        stats: dict = {"partitions": parts}
         if bucket_spec is not None:
             # silver buckets this epoch will touch — bucket = f(key cols,
             # n_buckets) is computable the moment the WAL lands, so the
@@ -121,14 +111,17 @@ class BronzeLog:
         fs.write_json_atomic(os.path.join(out, "_stats.json"), stats)
 
     def epoch_stats(self, epoch: int) -> dict | None:
-        """Landing-time stats: {"partitions": [...], "top_convs": [...]}, or
-        None for epochs landed before stats existed (caller recomputes)."""
+        """Landing-time stats: {"partitions": [...]} plus, when the landing
+        pre-hashed buckets, "bucket_spec" and "buckets"; None for epochs
+        landed before stats existed (caller recomputes). Records from older
+        landings may carry further keys (a "top_convs" list); readers ignore
+        them."""
         p = os.path.join(self.path, f"epoch={epoch}", "_stats.json")
         if not fs.exists(p):
             return None
         d = fs.read_json(p)
         if isinstance(d, list):  # legacy format: partitions only
-            return {"partitions": d, "top_convs": None}
+            return {"partitions": d}
         return d
 
     def append_epoch_pandas(

@@ -86,7 +86,6 @@ class StreamingTombstoneJoin:
                 key_cols=["d_lsn", "u_lsn"],
                 bucket_cols=["conv_id"],
                 n_buckets=8,
-                write_salt=1,
             )
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:

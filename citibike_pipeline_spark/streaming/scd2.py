@@ -180,7 +180,6 @@ class StreamingScd2:
                 key_cols=["conv_id", "turn_idx", "version_n"],
                 bucket_cols=["conv_id"],
                 n_buckets=8,
-                write_salt=1,
             )
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:

@@ -84,7 +84,6 @@ class StreamingSessions:
                 key_cols=["conv_id", "session_start"],
                 bucket_cols=["conv_id"],
                 n_buckets=8,
-                write_salt=1,
             )
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:

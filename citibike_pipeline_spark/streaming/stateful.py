@@ -108,7 +108,6 @@ class StreamingConvProgress:
                 key_cols=["conv_id"],
                 bucket_cols=["conv_id"],
                 n_buckets=8,
-                write_salt=1,
             )
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:

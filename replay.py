@@ -38,9 +38,6 @@ def main() -> None:
                          "buckets (default); mor = merge-on-read delta append, "
                          "LWW winners resolved at read time until compaction "
                          "folds the deltas")
-    ap.add_argument("--write-salt", type=int, default=4,
-                    help="hot-bucket writer spread (see BENCH/skew_ab.py for "
-                         "when this pays; 1 disables salting)")
     ap.add_argument("--day-partition", action="store_true",
                     help="full-width silver layout: days(ts) x bucket(conv_id) "
                          "(the 10^10-row spec; small-file pressure at toy scale)")
@@ -81,8 +78,7 @@ def main() -> None:
     def build_engine():
         return CdcEngine(
             spark, args.warehouse, n_buckets=args.n_buckets,
-            merge_mode=args.merge_mode, write_salt=args.write_salt,
-            day_partition=args.day_partition,
+            merge_mode=args.merge_mode, day_partition=args.day_partition,
         )
 
     eng = build_engine()

@@ -29,7 +29,7 @@ CFG = GenConfig(
 @pytest.fixture(scope="module")
 def replayed_engine(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh_parity"))
-    eng = CdcEngine(spark, wh, n_buckets=8, write_salt=2, hot_key_threshold=500)
+    eng = CdcEngine(spark, wh, n_buckets=8)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)

@@ -32,7 +32,7 @@ def oracle_pdf() -> pd.DataFrame:
 
 
 def new_engine(spark, tmp_path, name) -> CdcEngine:
-    eng = CdcEngine(spark, str(tmp_path / name), n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, str(tmp_path / name), n_buckets=4)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -45,7 +45,7 @@ def test_kill_and_resume_from_checkpoint(spark, tmp_path):
     eng.replay(to_epoch=1)
     assert eng.checkpoint()["last_epoch"] == 1
     # a brand-new engine instance over the same warehouse resumes
-    eng2 = CdcEngine(spark, eng.warehouse, n_buckets=4, write_salt=2)
+    eng2 = CdcEngine(spark, eng.warehouse, n_buckets=4)
     metrics = eng2.replay(catchup=False)
     assert [m["epoch"] for m in metrics] == [2, 3]
     pd.testing.assert_frame_equal(silver_pdf(eng2), oracle_pdf(), check_dtype=False)
@@ -120,7 +120,7 @@ def test_stale_redelivery_cannot_clobber_newer_state(spark, tmp_path):
 def test_epoch_order_permutation_parity(spark, tmp_path):
     """Applying epochs in a different order than they were generated still
     converges to the oracle (order-independence across epochs)."""
-    eng = CdcEngine(spark, str(tmp_path / "wh_perm"), n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, str(tmp_path / "wh_perm"), n_buckets=4)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -170,7 +170,7 @@ def test_late_landing_epoch_below_checkpoint_is_replayed(spark, tmp_path):
     applied (out-of-order landing) must still be replayed: pending-ness is
     manifest-derived, not checkpoint-derived, so nothing below the
     checkpoint can be silently lost."""
-    eng = CdcEngine(spark, str(tmp_path / "wh_gap"), n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, str(tmp_path / "wh_gap"), n_buckets=4)
     eng.init_tables()
     # land epochs 0, 2, 3 — epoch 1 is delayed
     for e in [0, 2, 3]:
@@ -210,7 +210,7 @@ def test_crash_between_snapshot_commit_and_manifest_write(spark, tmp_path):
     from citibike_pipeline_spark.lake import fs
     fs.write_json_atomic(eng._checkpoint_file, {"last_epoch": 2, "snapshot_id": 0})
 
-    eng2 = CdcEngine(spark, eng.warehouse, n_buckets=4, write_salt=2)
+    eng2 = CdcEngine(spark, eng.warehouse, n_buckets=4)
     metrics = eng2.replay(catchup=False)
     assert [m["epoch"] for m in metrics] == [3]
     assert metrics[0]["events_read"] > 0  # genuinely re-applied, not skipped
@@ -255,6 +255,72 @@ def test_spec_mismatch_falls_back_to_collect(spark, tmp_path):
     m = eng.apply_epoch(0)
     assert m["buckets_precomputed"] is False
     eng.replay()
+    assert silver_pdf(eng).equals(oracle_pdf())
+
+
+def test_legacy_salted_warehouse_still_applies(spark, tmp_path):
+    """A warehouse written before the per-bucket write salt was removed:
+    silver's manifest carries "write_salt": 4 over several files per bucket,
+    and the landing record carries a "top_convs" list. Reads return the same
+    rows, the next epoch still applies with landing-time buckets, and its
+    commit drops the key and writes one file per touched bucket."""
+    import json
+    import os
+    import uuid
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from citibike_pipeline_spark.lake import fs
+    from citibike_pipeline_spark.lake.table import BUCKET_COL, bucket_expr
+
+    eng = new_engine(spark, tmp_path, "wh_legacy_salt")
+    eng.apply_epoch(0)
+    silver = eng.silver
+    snap = silver.current_snapshot()
+    before = sorted(silver.read().collect())
+
+    # rewrite silver the way the salted writer laid it out: repartition on
+    # (bucket, hash(key) pmod 4), so a bucket spans several files
+    out = os.path.join(silver.path, "data", uuid.uuid4().hex)
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]), F.lit(4))
+    (silver.read()
+     .withColumn(BUCKET_COL, bucket_expr(snap.bucket_cols, snap.n_buckets))
+     .repartition(16, F.col(BUCKET_COL), salt)
+     .write.partitionBy(BUCKET_COL).parquet(out))
+    files = [
+        {"path": os.path.relpath(os.path.join(out, d, fn), silver.path),
+         "bucket": int(d.split("=")[1])}
+        for d in os.listdir(out) if d.startswith(f"{BUCKET_COL}=")
+        for fn in os.listdir(os.path.join(out, d)) if fn.endswith(".parquet")
+    ]
+    assert max(Counter(f["bucket"] for f in files).values()) >= 2
+    legacy = json.loads(snap.child(files, {"operation": "overwrite"}).to_json())
+    legacy["write_salt"] = 4
+    name = f"v{legacy['snapshot_id']:09d}"
+    fs.write_text(os.path.join(silver.path, "snapshots", f"{name}.json"),
+                  json.dumps(legacy))
+    fs.replace_text(os.path.join(silver.path, "VERSION"), name)
+
+    stats = os.path.join(eng.bronze.path, "epoch=1", "_stats.json")
+    rec = fs.read_json(stats)
+    rec["top_convs"] = [{"conv_id": "conv_00000", "n": 1}]
+    fs.write_json_atomic(stats, rec)
+
+    assert sorted(eng.silver.read().collect()) == before
+    m = eng.apply_epoch(1)
+    assert m["buckets_precomputed"] is True
+
+    head = eng.silver.current_snapshot()
+    raw = json.loads(fs.read_text(os.path.join(
+        silver.path, "snapshots", f"v{head.snapshot_id:09d}.json")))
+    assert "write_salt" not in raw
+    touched = set(raw["summary"]["buckets"])
+    assert len(touched) == m["buckets_touched"] > 0
+    per_bucket = Counter(f["bucket"] for f in raw["files"] if f["bucket"] in touched)
+    assert set(per_bucket) == touched and set(per_bucket.values()) == {1}
+
+    eng.replay(catchup=False)
     assert silver_pdf(eng).equals(oracle_pdf())
 
 

@@ -37,7 +37,7 @@ CFG = GenConfig(
 def incr_engine(spark, tmp_path_factory):
     """Replay epoch-at-a-time with an incremental gold refresh after each."""
     wh = str(tmp_path_factory.mktemp("wh_gold_incr"))
-    eng = CdcEngine(spark, wh, n_buckets=8, write_salt=1, hot_key_threshold=500)
+    eng = CdcEngine(spark, wh, n_buckets=8)
     eng.init_tables()
     modes = []
     for e in range(CFG.n_epochs):
@@ -190,7 +190,7 @@ def test_update_gold_heals_late_landed_epoch(spark, tmp_path):
     )
 
     wh = str(tmp_path / "wh_gold_late")
-    eng = CdcEngine(spark, wh, n_buckets=8, write_salt=1)
+    eng = CdcEngine(spark, wh, n_buckets=8)
     eng.init_tables()
     # land 0, 2, 3 — epoch 1 is delayed
     for e in [0, 2, 3]:

@@ -175,7 +175,7 @@ def test_warehouse_relocation(spark, tmp_path):
     cat = LakeCatalog(spark, src)
     t = cat.create_table(
         "ns.reloc", StructType.fromDDL("k int, v string"),
-        key_cols=["k"], n_buckets=4, write_salt=1,
+        key_cols=["k"], n_buckets=4,
     )
     df = spark.range(100).select(
         F.col("id").cast("int").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v")

@@ -38,8 +38,7 @@ def oracle_pdf() -> pd.DataFrame:
 
 
 def mor_engine(spark, tmp_path, name, mode="mor") -> CdcEngine:
-    eng = CdcEngine(spark, str(tmp_path / name), n_buckets=4, write_salt=2,
-                    merge_mode=mode)
+    eng = CdcEngine(spark, str(tmp_path / name), n_buckets=4, merge_mode=mode)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -74,8 +73,7 @@ def test_mor_reapplied_epoch_is_logical_noop(spark, tmp_path, mode):
     for fn in os.listdir(eng._manifest_dir):
         if fn.startswith("e000002"):
             os.remove(os.path.join(eng._manifest_dir, fn))
-    eng2 = CdcEngine(spark, eng.warehouse, n_buckets=4, write_salt=2,
-                     merge_mode=mode)
+    eng2 = CdcEngine(spark, eng.warehouse, n_buckets=4, merge_mode=mode)
     metrics = eng2.replay(catchup=False)
     assert [m["epoch"] for m in metrics] == [2]
     pd.testing.assert_frame_equal(silver_pdf(eng2), want)
@@ -119,7 +117,7 @@ def test_mor_incremental_gold_matches_full_rebuild(spark, tmp_path, mode):
     from citibike_pipeline_spark.plans.gold import _conv_plans
 
     eng = CdcEngine(spark, str(tmp_path / "wh_mor_gold"), n_buckets=4,
-                    write_salt=1, merge_mode=mode)
+                    merge_mode=mode)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -143,7 +141,7 @@ def test_autocompact_policy_bounds_delta_depth(spark, tmp_path, mode):
     """With mor_autocompact_deltas=N, replay folds the deltas once N commits
     stack up — the depth stays bounded and parity is untouched."""
     eng = CdcEngine(spark, str(tmp_path / "wh_mor_auto"), n_buckets=4,
-                    write_salt=2, merge_mode=mode, mor_autocompact_deltas=3)
+                    merge_mode=mode, mor_autocompact_deltas=3)
     eng.init_tables()
     compacts = 0
     for e in range(CFG.n_epochs):
@@ -169,7 +167,7 @@ def test_autocompact_policy_bounds_delta_depth(spark, tmp_path, mode):
 
 def test_autocompact_disabled_accumulates(spark, tmp_path):
     eng = CdcEngine(spark, str(tmp_path / "wh_mor_noauto"), n_buckets=4,
-                    write_salt=2, merge_mode="mor", mor_autocompact_deltas=None)
+                    merge_mode="mor", mor_autocompact_deltas=None)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -184,8 +182,7 @@ def test_mor_stale_redelivery_after_compact(spark, tmp_path):
     delta. The read-side LWW resolve must rank it below the base winner:
     the key keeps one row, the winner's."""
     eng = CdcEngine(spark, str(tmp_path / "wh_mor_stale"), n_buckets=4,
-                    write_salt=2, merge_mode="mor",
-                    mor_autocompact_deltas=None)
+                    merge_mode="mor", mor_autocompact_deltas=None)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -227,7 +224,7 @@ def test_legacy_delete_files_refuse_reads(spark, tmp_path):
         CdcEngine(spark, str(tmp_path / "wh_bad"), merge_mode="mor-del")
 
     eng = CdcEngine(spark, str(tmp_path / "wh_legacy"), n_buckets=4,
-                    write_salt=1, merge_mode="mor")
+                    merge_mode="mor")
     eng.init_tables()
     snap = eng.silver.current_snapshot()
     legacy = snap.child(snap.files, {"operation": "append", "mode": "mor_delta"})

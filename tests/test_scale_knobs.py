@@ -1,8 +1,8 @@
 """Exercise the scale knobs once at non-default values (VERDICT r1 #8):
-n_buckets=256 and a hot conversation whose writes must spread over
-write_salt files, then a small epoch whose merge prunes to the touched
-buckets. Pins that the 10^10-row knobs (bucket count, salt) actually work
-when turned, not just at the 32-bucket default.
+n_buckets=256 with a hot conversation, where every commit holds exactly one
+file per bucket it touched, then a small epoch whose merge prunes to the
+touched buckets. Pins that the 10^10-row knobs (bucket count, day
+partitioning) actually work when turned, not just at the 32-bucket default.
 """
 
 from collections import Counter
@@ -24,7 +24,6 @@ CFG = GenConfig(
 )
 
 N_BUCKETS = 256
-WRITE_SALT = 4
 
 
 def _bucket_of(spark, conv_id: str) -> int:
@@ -33,32 +32,28 @@ def _bucket_of(spark, conv_id: str) -> int:
     ).collect()[0][0]
 
 
-def test_large_bucket_count_and_hot_salting(spark, tmp_path):
-    eng = CdcEngine(
-        spark,
-        str(tmp_path / "wh_knobs"),
-        n_buckets=N_BUCKETS,
-        write_salt=WRITE_SALT,
-        hot_key_threshold=500,
-    )
+def _one_file_per_bucket(snap, buckets: set[int]) -> None:
+    files_by_bucket = Counter(f["bucket"] for f in snap.files if f["bucket"] in buckets)
+    assert set(files_by_bucket) == buckets
+    assert set(files_by_bucket.values()) == {1}, files_by_bucket
+
+
+def test_large_bucket_count_one_file_per_bucket(spark, tmp_path):
+    eng = CdcEngine(spark, str(tmp_path / "wh_knobs"), n_buckets=N_BUCKETS)
     eng.init_tables()
     pdf = generate_epoch(CFG, 0)
     eng.ingest_epoch_pandas(pdf, 0)
-    metrics = eng.replay(catchup=False)
+    eng.replay(catchup=False)
 
     snap = eng.silver.current_snapshot()
     assert snap.n_buckets == N_BUCKETS
 
-    # the hot conversation (skewed generator) was detected...
+    # the commit holds exactly one file per bucket it touched, the hot
+    # conversation's (skewed generator) bucket included
     hot_conv = pdf["conv_id"].value_counts().idxmax()
-    assert hot_conv in (metrics[0]["hot_convs"] or [hot_conv])
-    # ...and its bucket's data spread over multiple salted write files
-    files_by_bucket = Counter(f["bucket"] for f in snap.files)
-    hot_bucket = _bucket_of(spark, hot_conv)
-    assert files_by_bucket[hot_bucket] >= 2, (
-        f"hot bucket {hot_bucket} wrote {files_by_bucket[hot_bucket]} file(s); "
-        f"expected the salt to spread it over >=2"
-    )
+    all_buckets = {_bucket_of(spark, c) for c in pdf["conv_id"].unique()}
+    _one_file_per_bucket(snap, all_buckets)
+    assert len(snap.files) == len(all_buckets)
 
     # a small follow-up epoch merges via bucket pruning: cost bounded by the
     # touched conversations' buckets, out of 256
@@ -83,6 +78,12 @@ def test_large_bucket_count_and_hot_salting(spark, tmp_path):
     expected_buckets = {_bucket_of(spark, c) for c in touched_convs}
     assert m["buckets_touched"] == len(expected_buckets)
     assert m["buckets_touched"] <= 3
+    # the rewrite replaced each touched bucket with one file
+    after = eng.silver.current_snapshot()
+    _one_file_per_bucket(after, expected_buckets)
+    assert {f["path"] for f in after.files} - {f["path"] for f in snap.files} == {
+        f["path"] for f in after.files if f["bucket"] in expected_buckets
+    }
 
     got = {
         r.conv_id: r.text
@@ -102,8 +103,7 @@ def test_wide_buckets_with_day_partition_prunes_both_axes(spark, tmp_path):
         evolution_epoch=2, n_hot=1, turns_hot=100, turns_normal=20,
     )
     eng = CdcEngine(
-        spark, str(tmp_path / "wh_wide"), n_buckets=1024, write_salt=2,
-        day_partition=True,
+        spark, str(tmp_path / "wh_wide"), n_buckets=1024, day_partition=True,
     )
     eng.init_tables()
     for e in range(wide.n_epochs):
@@ -166,7 +166,7 @@ def test_silver_resolved_day_scope_matches_filter(spark, tmp_path):
     for mode in ("cow", "mor"):
         eng = CdcEngine(
             spark, str(tmp_path / f"wh_dayscope_{mode}"), n_buckets=8,
-            write_salt=1, merge_mode=mode, day_partition=(mode == "cow"),
+            merge_mode=mode, day_partition=(mode == "cow"),
         )
         eng.init_tables()
         for e in range(wide.n_epochs):

@@ -31,7 +31,7 @@ def silver_pdf(eng):
 @pytest.fixture(scope="module")
 def streamed(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh_stream"))
-    eng = CdcEngine(spark, wh, n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, wh, n_buckets=4)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)
@@ -67,7 +67,7 @@ def test_stale_source_schema_restarts_and_keeps_evolved_column(spark, tmp_path):
     from citibike_pipeline_spark.cdc.schemas import EVENT_SCHEMA_V1
 
     wh = str(tmp_path / "wh_stale")
-    eng = CdcEngine(spark, wh, n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, wh, n_buckets=4)
     eng.init_tables()
     # epoch 0 pre-evolution, epochs 1-2 post-evolution (have `tool`)
     for e in range(CFG.n_epochs):
@@ -94,7 +94,7 @@ def test_stateful_conv_progress(spark, tmp_path):
     from citibike_pipeline_spark.streaming.stateful import StreamingConvProgress
 
     wh = str(tmp_path / "wh_stateful")
-    eng = CdcEngine(spark, wh, n_buckets=4, write_salt=1)
+    eng = CdcEngine(spark, wh, n_buckets=4)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)

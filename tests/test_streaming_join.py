@@ -61,7 +61,7 @@ def _norm(df):
 @pytest.fixture(scope="module")
 def streamed(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh_ssjoin"))
-    eng = CdcEngine(spark, wh, n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, wh, n_buckets=4)
     eng.init_tables()
     for e in range(CFG.n_epochs):
         eng.ingest_epoch_pandas(generate_epoch(CFG, e), e)

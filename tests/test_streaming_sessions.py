@@ -32,7 +32,7 @@ def _sentinel_epoch(base: pd.DataFrame, shift_hours: int, lsn0: int) -> pd.DataF
 @pytest.fixture(scope="module")
 def streamed(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh_sessions"))
-    eng = CdcEngine(spark, wh, n_buckets=4, write_salt=2)
+    eng = CdcEngine(spark, wh, n_buckets=4)
     eng.init_tables()
     last = None
     for e in range(CFG.n_epochs):

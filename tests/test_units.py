@@ -1,4 +1,4 @@
-"""Unit tests: LWW dedup matrix, skew salting, schema reconciliation,
+"""Unit tests: LWW dedup matrix, schema reconciliation,
 scalar/text functions, gold plans vs pandas oracle."""
 
 import pandas as pd
@@ -14,7 +14,6 @@ from citibike_pipeline_spark.cdc.reconcile import (
     reconcile_to_schema,
     union_schema_versions,
 )
-from citibike_pipeline_spark.cdc.skew import detect_hot_keys, repartition_salted
 from citibike_pipeline_spark.functions.scalar import (
     derive_season,
     guarded_div,
@@ -79,19 +78,6 @@ def test_lww_order_independence(spark):
         random.Random(seed).shuffle(rows)
         out = lww_dedup(spark.createDataFrame(rows, EV)).collect()
         assert len(out) == 1 and out[0].lsn == 29
-
-
-def test_salting_preserves_results(spark):
-    cfg = GenConfig(n_convs=20, n_epochs=1, events_per_epoch=3000, n_hot=1)
-    pdf = generate_epoch(cfg, 0)
-    df = spark.createDataFrame(pdf)
-    hot = detect_hot_keys(df, threshold=300)
-    assert hot, "expected a hot conversation in the skewed corpus"
-    plain = lww_dedup(df).orderBy("conv_id", "turn_idx").collect()
-    salted = lww_dedup(
-        repartition_salted(df, 8, hot_keys=hot, salt_factor=4)
-    ).orderBy("conv_id", "turn_idx").collect()
-    assert plain == salted
 
 
 def test_reconcile_pads_and_rejects(spark):
