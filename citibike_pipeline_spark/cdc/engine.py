@@ -3,9 +3,9 @@
 Orchestration is plain function calls in dependency order (the reference's
 Airflow DAGs collapse to this, ``trip_pipeline.py:131-132`` ≙ SURVEY.md §2.9 I7).
 
-Per-epoch dataflow (`apply_epoch`)::
+Per-apply dataflow (`apply_epochs`; `apply_epoch(e)` is `apply_epochs([e])`)::
 
-    bronze.read_epoch(e)                       -- directory-pruned scan
+    bronze.read_epochs(lo, hi)                 -- directory-pruned scan
       |> skip partitions already in manifest   -- exactly-once fast path
       |> reconcile to silver superset schema   -- typed-NULL padding (evolution)
       |> MERGE INTO silver, LWW resolver       -- ONE max_by aggregate over
@@ -39,8 +39,9 @@ one file.
 
 Exactly-once: two complementary mechanisms.
 1. Commit manifests keyed (checkpoint_epoch, partition_id) — written after the
-   silver snapshot commit; `apply_epoch` first drops any source partition that
-   already has a manifest, so a replayed/duplicated epoch is a no-op scan.
+   silver snapshot commit; `apply_epochs` first drops any source partition
+   that already has a manifest, so a replayed/duplicated epoch is a no-op
+   scan.
 2. LWW merge resolution — even if the process dies *between* the snapshot
    commit and the manifest write, re-applying the same events is a semantic
    no-op: every change loses the (lsn, op_rank) comparison against the state
@@ -68,12 +69,23 @@ from pyspark.sql.types import StructField, StructType
 from ..lake import LakeCatalog, merge_into
 from ..lake import fs
 from ..sources.bronze import BronzeLog
-from .dedup import lww_dedup_agg, op_rank_col
+from .dedup import lww_dedup_agg
 from .reconcile import reconcile_to_schema
 from .schemas import EVENT_SCHEMA_V1, KEY_COLS
 
 # Event columns that are WAL metadata, not part of the silver entity payload.
 _EVENT_META = {"schema_version", "partition_id", "checkpoint_epoch"}
+
+
+def _lww(rows: DataFrame) -> DataFrame:
+    """LWW-collapse silver-shaped rows to one winner per key by (lsn,
+    op_rank); redelivered duplicates that tie on both pick the later ingest
+    epoch, NULL losing. max_by aggregate: one exchange with map-side partial
+    collapse of duplicates; each side of it sorts for a sort aggregate (see
+    cdc.dedup.lww_dedup_agg)."""
+    return lww_dedup_agg(
+        rows, extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))]
+    )
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -176,7 +188,8 @@ class CdcEngine:
         # touched-bucket pre-hashing at landing only pays off when the merge
         # prunes by bucket (cow): the mor apply path appends deltas without
         # pruning, so skip the per-landing distinct job there (r3 ADVICE).
-        # _buckets_from_landing tolerates the absent spec (falls back).
+        # A cow epoch landed without a spec gets None from
+        # _buckets_from_landing, and merge_into collects its bucket set.
         self.bronze.append_epoch_pandas(
             pdf.reindex(columns=[f.name for f in self.bronze.schema().fields]),
             epoch,
@@ -196,8 +209,8 @@ class CdcEngine:
     def _buckets_from_landing(self, epochs: list[int]) -> list[int] | None:
         """Union of landing-time touched-bucket sets for the given epochs —
         None if any epoch lacks them or was hashed against a different bucket
-        spec (legacy landing, re-bucketed silver), in which case the merge
-        falls back to its own distinct+collect. A set recorded for the WHOLE
+        spec (legacy landing, re-bucketed silver), in which case merge_into
+        collects its own bucket set. A set recorded for the WHOLE
         epoch may be a superset of the still-uncommitted partitions' buckets
         after a partial retry — sound for pruning (never misses a bucket),
         marginally wider than minimal."""
@@ -263,7 +276,7 @@ class CdcEngine:
     def _is_fully_committed(self, epoch: int, committed: set[int]) -> bool:
         """True iff every partition the WAL landed for this epoch has a
         commit manifest. Epochs without a landing record are conservatively
-        treated as pending (apply_epoch's manifest filter makes re-applying
+        treated as pending (apply_epochs' manifest filter makes re-applying
         them a no-op scan)."""
         rec = self.bronze.epoch_stats(epoch)
         if rec is None:
@@ -281,78 +294,11 @@ class CdcEngine:
             # same documented total order (lsn, op_rank) pick every winner —
             # stale cross-epoch redeliveries lose to existing state, fresh
             # changes beat it. Tombstones ('D' winners) are RETAINED.
-            # max_by aggregate: one exchange with map-side partial collapse
-            # of duplicates; each side of it sorts for a sort aggregate
-            # (see cdc.dedup.lww_dedup_agg).
-            return lww_dedup_agg(
-                target.select(*silver_cols).unionByName(changes.select(*silver_cols)),
-                # deterministic pick among redelivered duplicates that tie on
-                # (lsn, op_rank): prefer the later ingest epoch, NULL loses
-                extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))],
+            return _lww(
+                target.select(*silver_cols).unionByName(changes.select(*silver_cols))
             )
 
         return resolve
-
-    def _apply_changes(
-        self,
-        silver,
-        changes: DataFrame,
-        n_events: int,
-        summary: dict,
-        touched_buckets: list[int] | None = None,
-    ) -> dict:
-        """Apply a reconciled change-set under the configured merge mode.
-
-        cow (default): copy-on-write MERGE — resolve (target ∪ changes) with
-        the LWW aggregate and rewrite the touched buckets. Write cost scales
-        with touched-bucket size; reads are resolve-free.
-
-        mor: merge-on-read delta append (Iceberg-v2/Hudi MOR trade) — the
-        change-set is LWW-collapsed batch-locally and APPENDED; cross-delta
-        and delta-vs-base winners resolve at READ time (`silver_resolved`).
-        Per-epoch write cost is O(changes) with no target read or bucket
-        rewrite at all — the right mode for high-frequency small epochs —
-        at the price of read amplification until `compact()` folds deltas
-        into the base. Exactly-once still holds: a re-applied epoch appends
-        duplicate rows whose identical (key, lsn, op) lose/tie in the read-
-        side LWW resolve, so the logical state is unchanged.
-        """
-        silver_cols = [f.name for f in silver.schema().fields]
-        if self.merge_mode == "mor":
-            deduped = lww_dedup_agg(
-                changes.select(*silver_cols),
-                extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))],
-            )
-            snap = silver.append(deduped, summary={**summary, "mode": "mor_delta"})
-            return {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
-        # Landing-time bucket stats make pruning free (no distinct+collect
-        # job), so they win whenever present; without them the table-relative
-        # heuristic decides whether the collect pays for itself.
-        return merge_into(
-            silver,
-            changes,
-            resolver=self._lww_resolver(),
-            summary=summary,
-            prune_buckets=touched_buckets is not None or self._should_prune(n_events),
-            touched_buckets=touched_buckets,
-        )
-
-    def _should_prune(self, n_events: int) -> bool:
-        """Bucket pruning pays when the change-set is SMALL RELATIVE TO THE
-        TABLE: the touched-bucket collect costs one pass over the change-set
-        and saves reading+rewriting every untouched bucket. A change-set
-        comparable to the table statistically covers all buckets anyway, and
-        against a small/empty table (bootstrap, catch-up from scratch) there
-        is nothing to save — so the threshold is table-relative, not an
-        absolute event count (which inverted at large table sizes: a fixed
-        640k-event cutoff forced FULL-table rewrites precisely when the table
-        dwarfed the batch). Table size comes from manifest stats ONLY —
-        if a legacy snapshot lacks per-file counts we fall back to the old
-        absolute heuristic rather than paying a full count() per merge."""
-        table_rows = self.silver.stat_row_count()
-        if table_rows is None:
-            return n_events < self.n_buckets * 20_000
-        return n_events * 4 < table_rows
 
     def _epoch_part_stats(self, epoch: int, done: set[int]) -> list[dict]:
         """Per-partition offset stats for the uncommitted partitions of one
@@ -381,90 +327,38 @@ class CdcEngine:
 
     def apply_epoch(self, epoch: int) -> dict:
         """Apply one epoch's change events to silver. Returns metrics dict."""
-        t0 = time.time()
-        silver = self.silver
-
-        events = self.bronze.read_epoch(epoch)
-
-        # exactly-once: drop source partitions already committed for this epoch
-        done = self.committed_partitions(epoch)
-        if done:
-            events = events.filter(~F.col("partition_id").isin([int(p) for p in done]))
-
-        # lineage stats come from the WAL landing record — no extra scan
-        part_stats = self._epoch_part_stats(epoch, done)
-        n_events = int(sum(s["n_events"] for s in part_stats))
-        if n_events == 0:
-            metrics = {
-                "epoch": epoch,
-                "events_read": 0,
-                "skipped": True,
-                "wall_sec": time.time() - t0,
-            }
-            self._write_metrics(epoch, metrics)
-            return metrics
-
-        # schema evolution: any new payload column -> silver ADD COLUMN
-        silver_have = {f.name for f in silver.schema().fields}
-        new_payload = [
-            f
-            for f in events.schema.fields
-            if f.name not in _EVENT_META and f.name not in silver_have
-        ]
-        if new_payload:
-            silver.add_columns([StructField(f.name, f.dataType, True) for f in new_payload])
-            silver = self.silver  # reload snapshot
-
-        # No pre-dedup pass: the LWW merge resolver aggregates over
-        # (target ∪ changes) anyway, and winner-of-winners equals the global
-        # winner — pre-deduplicating would add a full extra shuffle+sort of
-        # the event set for nothing. (The ≤1-row/key contract applies to the
-        # DEFAULT source-wins resolver only.)
-        changes = events.withColumn("ingest_epoch", F.lit(epoch).cast("int"))
-        changes = reconcile_to_schema(
-            changes.drop(*(c for c in _EVENT_META if c in changes.columns)),
-            silver.schema(),
-        )
-
-        stats = self._apply_changes(
-            silver, changes, n_events, {"epoch": epoch},
-            touched_buckets=self._buckets_from_landing([epoch]),
-        )
-
-        # manifests AFTER the atomic snapshot commit; a crash in between is
-        # safe because LWW re-application is a semantic no-op (see module doc)
-        self._write_manifests(epoch, part_stats, stats["snapshot_id"])
-        self._advance_checkpoint(epoch, stats["snapshot_id"])
-
-        wall = time.time() - t0
-        metrics = {
-            "epoch": epoch,
-            "events_read": n_events,
-            "partitions": len(part_stats),
-            "buckets_touched": stats["buckets_touched"],
-            "buckets_precomputed": bool(stats.get("buckets_precomputed", False)),
-            "sec_touched_collect": stats.get("sec_touched_collect"),
-            "snapshot_id": stats["snapshot_id"],
-            "wall_sec": wall,
-            "events_per_sec": n_events / wall if wall > 0 else None,
-            "skipped": False,
-        }
-        self._write_metrics(epoch, metrics)
-        return metrics
+        return self.apply_epochs([epoch])
 
     def apply_epochs(self, epochs: list[int]) -> dict:
-        """Catch-up mode: apply a RANGE of pending epochs in ONE dedup+merge.
+        """Apply pending epochs to silver in ONE dedup+merge; returns the
+        apply's metrics record (also written to the metrics log).
 
-        Correct because the LWW total order (lsn, op_rank) is global — final
-        state is independent of how the event stream is sliced into merges
-        (the property the parity tests pin down). Amortizes the per-merge
-        fixed cost (manifest checks, bucket collect, snapshot commit) across
-        the whole backlog: resume-after-downtime costs one merge, not one per
+        One epoch is the tail step; a RANGE of epochs is catch-up. Correct
+        because the LWW total order (lsn, op_rank) is global — final state
+        is independent of how the event stream is sliced into merges (the
+        property the parity tests pin down). Amortizes the per-merge fixed
+        cost (manifest checks, bucket collect, snapshot commit) across the
+        whole backlog: resume-after-downtime costs one merge, not one per
         missed epoch. Per-(epoch, partition) manifests and lineage stats are
         still recorded individually.
+
+        cow (default): copy-on-write MERGE — resolve (target ∪ changes) with
+        the LWW aggregate and rewrite the touched buckets. Write cost scales
+        with touched-bucket size; reads are resolve-free.
+
+        mor: merge-on-read delta append (Iceberg-v2/Hudi MOR trade) — the
+        change-set is LWW-collapsed batch-locally and APPENDED; cross-delta
+        and delta-vs-base winners resolve at READ time (`silver_resolved`).
+        Per-epoch write cost is O(changes) with no target read or bucket
+        rewrite at all — the right mode for high-frequency small epochs —
+        at the price of read amplification until `compact()` folds deltas
+        into the base. Exactly-once still holds: a re-applied epoch appends
+        duplicate rows whose identical (key, lsn, op) lose/tie in the read-
+        side LWW resolve, so the logical state is unchanged.
         """
         t0 = time.time()
         phases: dict[str, float] = {}
+        head = {"epoch": max(epochs), "epochs": epochs}
         silver = self.silver
         # the range read spans [min, max], but with manifest-derived pending
         # lists the range can be SPARSE (a late-landed epoch between fully
@@ -489,7 +383,7 @@ class CdcEngine:
         phases["landing_stats"] = round(time.time() - _t, 2)
         n_events = int(sum(s["n_events"] for s in part_stats))
         if n_events == 0:
-            metrics = {"epochs": epochs, "events_read": 0, "skipped": True,
+            metrics = {**head, "events_read": 0, "skipped": True,
                        "wall_sec": time.time() - t0}
             self._write_metrics(max(epochs), metrics)
             return metrics
@@ -503,19 +397,32 @@ class CdcEngine:
             silver.add_columns([StructField(f.name, f.dataType, True) for f in new_payload])
             silver = self.silver
 
-        # no pre-dedup: the LWW resolver's aggregate subsumes it (see apply_epoch)
+        # No pre-dedup pass: the LWW resolve aggregates over (target ∪
+        # changes) anyway, and winner-of-winners equals the global winner —
+        # pre-deduplicating would add a full extra shuffle+sort of the event
+        # set for nothing. (The ≤1-row/key contract applies to merge_into's
+        # DEFAULT source-wins resolver only.)
         changes = events.withColumn("ingest_epoch", F.col("checkpoint_epoch"))
         changes = reconcile_to_schema(
             changes.drop(*(c for c in _EVENT_META if c in changes.columns)),
             silver.schema(),
         )
+        summary = {"epochs": [min(epochs), max(epochs)]}
         _t = time.time()
-        stats = self._apply_changes(
-            silver, changes, n_events, {"epochs": [min(epochs), max(epochs)]},
-            touched_buckets=self._buckets_from_landing(epochs),
-        )
+        if self.merge_mode == "mor":
+            snap = silver.append(_lww(changes), summary={**summary, "mode": "mor_delta"})
+            stats = {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
+        else:
+            # landing-time bucket sets make pruning free; without them (a
+            # legacy landing, a re-bucketed silver) the merge collects its own
+            stats = merge_into(
+                silver, changes, resolver=self._lww_resolver(), summary=summary,
+                touched_buckets=self._buckets_from_landing(epochs),
+            )
         phases["merge"] = round(time.time() - _t, 2)
 
+        # manifests AFTER the atomic snapshot commit; a crash in between is
+        # safe because LWW re-application is a semantic no-op (see module doc)
         by_epoch: dict[int, list[dict]] = {}
         for s in part_stats:
             by_epoch.setdefault(int(s["checkpoint_epoch"]), []).append(s)
@@ -525,11 +432,12 @@ class CdcEngine:
 
         wall = time.time() - t0
         metrics = {
-            "epochs": epochs,
+            **head,
             "events_read": n_events,
             "partitions": len(part_stats),
             "buckets_touched": stats["buckets_touched"],
             "buckets_precomputed": bool(stats.get("buckets_precomputed", False)),
+            "sec_touched_collect": stats.get("sec_touched_collect"),
             "snapshot_id": stats["snapshot_id"],
             "wall_sec": wall,
             "events_per_sec": n_events / wall if wall > 0 else None,
@@ -582,10 +490,8 @@ class CdcEngine:
             # caller mistakes the fold for an applied epoch.
             self.maybe_autocompact()
             return []
-        if catchup and len(pending) > 1:
-            out = [self.apply_epochs(pending)]
-        else:
-            out = [self.apply_epoch(e) for e in pending]
+        batches = [pending] if catchup else [[e] for e in pending]
+        out = [self.apply_epochs(b) for b in batches]
         # post-apply housekeeping: bounded mor read amplification (no-op
         # under cow or below the delta-depth threshold)
         auto = self.maybe_autocompact()
@@ -627,9 +533,7 @@ class CdcEngine:
         mor = self.merge_mode == "mor"
         df = self.silver.read(buckets=buckets, days=None if mor else days)
         if mor:
-            df = lww_dedup_agg(
-                df, extra_order_cols=[F.coalesce(F.col("ingest_epoch"), F.lit(-1))]
-            )
+            df = _lww(df)
         if days is not None:
             lo, hi = days
             d = F.to_date("ts")
@@ -757,7 +661,8 @@ class CdcEngine:
 
         def field(m: dict, c: str):
             if c == "epoch" and "epoch" not in m and m.get("epochs"):
-                return int(max(m["epochs"]))  # catchup entry: epoch span's head
+                # catch-up records from older builds carry only `epochs`
+                return int(max(m["epochs"]))
             return m.get(c)
 
         # apply records only; standalone autocompact records (variable

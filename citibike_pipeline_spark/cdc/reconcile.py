@@ -8,10 +8,11 @@ Two levels, mirroring the reference:
    (``validation.py:22-30``: missing columns error *unless* nullable-pad is
    sanctioned; unexpected columns error always).
 
-2. Arrow-batch-level (`reconcile_batches_udf`): when events of mixed schema
-   versions flow through a pandas-UDF stage mid-replay, each Arrow batch may
-   carry a different column set; `mapInPandas` reconciles per batch —
-   vectorized, never per-row (BASELINE.json:input_hint).
+2. Arrow-batch-level (`reconcile_batches`): when events of mixed schema
+   versions flow through a pandas-UDF stage, each Arrow batch may carry a
+   different column set; `mapInPandas` reconciles per batch — vectorized,
+   never per-row (BASELINE.json:input_hint). The replay path does not use
+   it: the engine reconciles with `reconcile_to_schema`.
 """
 
 from __future__ import annotations

@@ -14,11 +14,9 @@ contract is what makes the rewrite below correct.
 
 Physical strategy (copy-on-write, bucket granularity):
 
-1. bucket ids touched by the change-set — collected when the change-set is
-   small relative to the bucket count (`prune_buckets=True`), assumed ALL
-   when a large catch-up batch statistically covers every bucket anyway
-   (skipping the collect saves a full dedup execution + the persist that
-   backed its second consumption — measured seconds of serial driver time)
+1. bucket ids touched by the change-set — the caller's ``touched_buckets``
+   when it knows them (the CDC engine records them when an epoch lands),
+   else one distinct+collect over the change-set
 2. target rows in ONLY those buckets      -> manifest-pruned scan
 3. resolver(target_subset, changes)       -> new content of those buckets
    (default: target ⟕anti changes ∪ non-delete changes — "source wins";
@@ -26,6 +24,9 @@ Physical strategy (copy-on-write, bucket granularity):
    target/change has the greater (lsn, op_rank), so stale redeliveries
    from earlier epochs can never clobber newer state)
 4. replace_buckets(...)                   -> one atomic snapshot commit
+
+Steps 1-4 are one body, `_rewrite_buckets`, shared by `merge_into` and the
+group-scoped `replace_groups`; they differ only in the resolver.
 
 Buckets untouched by the epoch are never read or rewritten, so the cost per
 epoch scales with the change-set's key spread, not table size — the property
@@ -45,7 +46,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .table import BUCKET_COL, LakeTable, bucket_expr
+from .table import LakeTable, Snapshot, bucket_expr
 
 OP_COL = "op"
 
@@ -59,12 +60,52 @@ def _source_wins_resolver(cols: list[str], keys: list[str]):
     return resolve
 
 
+def _rewrite_buckets(
+    table: LakeTable,
+    snap: Snapshot,
+    keyed: DataFrame,
+    touched_buckets: list[int] | None,
+    resolve: Callable[[DataFrame], DataFrame],
+    summary: dict | None,
+) -> dict:
+    """Replace the touched buckets of ``table`` with ``resolve(their rows)``.
+
+    The touched set is ``touched_buckets`` when given (a superset is sound:
+    extra buckets are rewritten identically), else the distinct buckets of
+    ``keyed``'s rows, collected in one job. Returns merge stats
+    {buckets_touched, snapshot_id, sec_*}."""
+    t_touched = 0.0
+    if touched_buckets is None:
+        t0 = time.time()
+        # hash by bucket_cols (the locality spec), NOT the merge key — the
+        # write path and the pruning MUST hash identically
+        touched_buckets = [
+            r[0]
+            for r in keyed.select(bucket_expr(snap.bucket_cols, snap.n_buckets))
+            .distinct()
+            .collect()
+        ]
+        t_touched = time.time() - t0
+    touched = sorted(set(touched_buckets))
+    if not touched:
+        return {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
+    cols = [f.name for f in snap.schema().fields]
+    t0 = time.time()
+    merged = resolve(table.read(buckets=touched)).select(*cols)
+    new_snap = table.replace_buckets(merged, touched, summary=summary)
+    return {
+        "buckets_touched": len(touched),
+        "snapshot_id": new_snap.snapshot_id,
+        "sec_touched_collect": round(t_touched, 2),
+        "sec_resolve_write": round(time.time() - t0, 2),
+    }
+
+
 def merge_into(
     table: LakeTable,
     changes: DataFrame,
     resolver: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     summary: dict | None = None,
-    prune_buckets: bool = True,
     touched_buckets: list[int] | None = None,
 ) -> dict:
     """Apply a deduped keyed change-set (with `op` in I/U/D) to the table.
@@ -76,95 +117,30 @@ def merge_into(
     job entirely. A superset is sound (extra buckets are rewritten
     identically); a wrong spec is the caller's responsibility to invalidate.
 
-    ``prune_buckets=False`` is the catch-up fast path: the caller asserts the
-    change-set plausibly touches every bucket, so the merge reads the full
-    table and rewrites all buckets in one pass with no touched-collect job.
+    The change-set is persisted when it is consumed twice: by the bucket
+    collect and the resolve, or by the DEFAULT resolver's two probes
+    (anti-join keys + upserts). A caller-supplied resolver with known
+    buckets — e.g. the engine's LWW max_by, which consumes `changes`
+    exactly once — skips the persist.
 
-    On both fast paths the change-set is persisted only when the DEFAULT
-    resolver runs (it probes `changes` twice: anti-join keys + upserts); a
-    caller-supplied resolver — e.g. the engine's LWW max_by, which consumes
-    `changes` exactly once — skips the persist.
-
-    Returns merge stats {buckets_touched, snapshot_id, sec_*}.
+    Returns merge stats {buckets_touched, buckets_precomputed, snapshot_id,
+    sec_*}.
     """
     snap = table.current_snapshot()
-    keys = snap.key_cols
     cols = [f.name for f in snap.schema().fields]
-    resolve = resolver or _source_wins_resolver(cols, keys)
-
-    if not prune_buckets:
-        touched = list(range(snap.n_buckets))
-        cache_changes = resolver is None  # default resolver probes twice
-        if cache_changes:
-            changes = changes.persist()
-        try:
-            t0 = time.time()
-            merged = resolve(table.read(), changes).select(*cols)
-            new_snap = table.replace_buckets(merged, touched, summary=summary)
-            return {
-                "buckets_touched": len(touched),
-                "snapshot_id": new_snap.snapshot_id,
-                "sec_touched_collect": 0.0,
-                "sec_resolve_write": round(time.time() - t0, 2),
-            }
-        finally:
-            if cache_changes:
-                changes.unpersist()
-
-    if touched_buckets is not None:
-        touched = sorted(set(touched_buckets))
-        if not touched:
-            return {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
-        # The engine's LWW resolver consumes `changes` exactly once (one
-        # union + max_by agg), so the fast path skips the persist for it.
-        # The DEFAULT resolver probes `changes` twice (anti-join keys +
-        # upserts) — persist there, or non-engine callers recompute the
-        # change-set plan per probe (r3 ADVICE).
-        cache_changes = resolver is None
-        if cache_changes:
-            changes = changes.persist()
-        try:
-            t0 = time.time()
-            merged = resolve(table.read(buckets=touched), changes).select(*cols)
-            new_snap = table.replace_buckets(merged, touched, summary=summary)
-            return {
-                "buckets_touched": len(touched),
-                "snapshot_id": new_snap.snapshot_id,
-                "sec_touched_collect": 0.0,
-                "buckets_precomputed": True,
-                "sec_resolve_write": round(time.time() - t0, 2),
-            }
-        finally:
-            if cache_changes:
-                changes.unpersist()
-
-    # Bucket layout is keyed by bucket_cols (locality spec), NOT the merge
-    # key — the write path and the pruning MUST hash identically.
-    changes = changes.withColumn(BUCKET_COL, bucket_expr(snap.bucket_cols, snap.n_buckets))
-
-    # (1) Which buckets does this epoch touch? Tiny result — safe to collect.
-    t0 = time.time()
-    touched = [r[0] for r in changes.select(BUCKET_COL).distinct().collect()]
-    t_touched = time.time() - t0
-    if not touched:
-        return {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
-
-    # The change-set feeds two plan branches (per resolver); avoid recompute.
-    changes = changes.drop(BUCKET_COL).persist()
+    resolve = resolver or _source_wins_resolver(cols, snap.key_cols)
+    cache_changes = touched_buckets is None or resolver is None
+    if cache_changes:
+        changes = changes.persist()
     try:
-        target = table.read(buckets=touched)
-        merged = resolve(target, changes).select(*cols)
-        t0 = time.time()
-        new_snap = table.replace_buckets(merged, touched, summary=summary)
-        t_write = time.time() - t0
-        return {
-            "buckets_touched": len(touched),
-            "snapshot_id": new_snap.snapshot_id,
-            "sec_touched_collect": round(t_touched, 2),
-            "sec_resolve_write": round(t_write, 2),
-        }
+        stats = _rewrite_buckets(
+            table, snap, changes, touched_buckets,
+            lambda target: resolve(target, changes), summary,
+        )
     finally:
-        changes.unpersist()
+        if cache_changes:
+            changes.unpersist()
+    return {**stats, "buckets_precomputed": touched_buckets is not None}
 
 
 def replace_groups(
@@ -188,7 +164,8 @@ def replace_groups(
 
     Requires ``group_cols`` to be a prefix-superset of the table's
     ``bucket_cols`` so the rewrite prunes to the groups' buckets: cost scales
-    with the change-set's group spread, not table size.
+    with the change-set's group spread, not table size. Tables sharing a
+    bucket spec can reuse ONE precomputed ``touched_buckets`` set.
     """
     snap = table.current_snapshot()
     if not set(snap.bucket_cols) <= set(group_cols):
@@ -199,31 +176,12 @@ def replace_groups(
     cols = [f.name for f in snap.schema().fields]
     groups = groups.select(*group_cols).distinct().persist()
     try:
-        t0 = time.time()
-        if touched_buckets is not None:
-            # caller pre-computed the bucket set (tables sharing a bucket
-            # spec can reuse ONE collect across several replace_groups)
-            touched = list(touched_buckets)
-        else:
-            touched = [
-                r[0]
-                for r in groups.select(bucket_expr(snap.bucket_cols, snap.n_buckets))
-                .distinct()
-                .collect()
-            ]
-        t_touched = time.time() - t0
-        if not touched:
-            return {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
-        target = table.read(buckets=touched)
-        survivors = target.join(groups, on=group_cols, how="left_anti")
-        merged = survivors.select(*cols).unionByName(new_rows.select(*cols))
-        t0 = time.time()
-        new_snap = table.replace_buckets(merged, touched, summary=summary)
-        return {
-            "buckets_touched": len(touched),
-            "snapshot_id": new_snap.snapshot_id,
-            "sec_touched_collect": round(t_touched, 2),
-            "sec_resolve_write": round(time.time() - t0, 2),
-        }
+        return _rewrite_buckets(
+            table, snap, groups, touched_buckets,
+            lambda target: target.join(groups, on=group_cols, how="left_anti")
+            .select(*cols)
+            .unionByName(new_rows.select(*cols)),
+            summary,
+        )
     finally:
         groups.unpersist()

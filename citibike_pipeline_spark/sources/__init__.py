@@ -1,4 +1,4 @@
-"""Sources: bronze WAL log, file scans, small-dimension ingestion."""
+"""Sources: bronze WAL log, small-dimension ingestion."""
 
 from .bronze import BronzeLog
 from .dims import tool_catalog

@@ -25,8 +25,9 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cdc.engine import CdcEngine, _EVENT_META, _atomic_write_json
+from ..cdc.engine import CdcEngine, _EVENT_META, _atomic_write_json, _lww
 from ..cdc.reconcile import reconcile_to_schema
+from ..lake import merge_into
 
 # Sentinel message raised by _apply_batch when the running query's source
 # schema has fallen behind bronze's evolved schema; the supervisor loop
@@ -89,10 +90,17 @@ class StreamingTail:
             changes.drop(*(c for c in _EVENT_META if c in changes.columns)),
             silver.schema(),
         )
-        # honors the engine's merge mode (cow MERGE or mor delta append)
-        stats = self.engine._apply_changes(
-            silver, changes, n_events=0, summary={"stream_batch": batch_id}
-        )
+        # honors the engine's merge mode (cow MERGE or mor delta append,
+        # as CdcEngine.apply_epochs); stream batches carry no landing-time
+        # bucket sets, so the cow merge collects its own
+        summary = {"stream_batch": batch_id}
+        if self.engine.merge_mode == "mor":
+            snap = silver.append(_lww(changes), summary={**summary, "mode": "mor_delta"})
+            stats = {"buckets_touched": 0, "snapshot_id": snap.snapshot_id}
+        else:
+            stats = merge_into(
+                silver, changes, resolver=self.engine._lww_resolver(), summary=summary
+            )
         self._mark_batch(batch_id, stats)
 
     def run_available(self, max_restarts: int = 4, _initial_schema=None) -> None:

@@ -349,3 +349,19 @@ def test_metrics_and_lineage_tables(spark, tmp_path):
     assert set(lin.checkpoint_epoch) == set(range(cfg.n_epochs))
     assert (lin.groupby("checkpoint_epoch").partition_id.nunique() > 0).all()
     assert (lin.n_events > 0).all() and (lin.min_lsn <= lin.max_lsn).all()
+
+    # a single-epoch apply_epoch writes the same record shape as the
+    # catch-up apply_epochs above, and metrics_df gains one row with its epoch
+    nxt = cfg.n_epochs
+    eng.ingest_epoch_pandas(generate_epoch(cfg, nxt), nxt)
+    single = eng.apply_epoch(nxt)
+    recs = [r for r in eng.metrics() if "events_read" in r]
+    assert [r["epochs"] for r in recs] == [list(range(cfg.n_epochs)), [nxt]]
+    assert recs[1] == single
+    for rec in recs:
+        assert rec["epoch"] == max(rec["epochs"]) and not rec["skipped"]
+        assert rec["buckets_precomputed"] is True
+        assert rec["sec_touched_collect"] == 0.0
+        assert {"landing_stats", "merge"} <= set(rec["phases"])
+    m = eng.metrics_df().toPandas()
+    assert [int(e) for e in m.epoch] == [cfg.n_epochs - 1, nxt]

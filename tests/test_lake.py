@@ -151,14 +151,35 @@ def test_merge_pruning_respects_bucket_cols(spark, cat):
     assert ("k0", 1, "v2") in got and len(got) == 60
 
 
-def test_merge_prune_disabled_full_rewrite(spark, cat):
-    """prune_buckets=False (catch-up fast path) must produce identical state."""
+@pytest.mark.parametrize("bucket_set", ["collect", "exact", "all"])
+def test_merge_touched_bucket_sets(spark, cat, bucket_set):
+    """merge_into's one bucket-rewrite body gives the same rows whether it
+    collects the touched buckets itself (touched_buckets=None) or is handed
+    them, exactly or as a superset (every bucket). Only the buckets in the
+    set are rewritten: the files of every other bucket survive."""
     t = cat.create_table("ns.t10", SCHEMA, key_cols=["k", "seq"], n_buckets=4)
-    t.append(mk(spark, [("a", 1, "old", "I", 1), ("b", 1, "keep", "I", 2)]))
-    changes = mk(spark, [("a", 1, "new", "U", 10), ("c", 1, "ins", "I", 12)])
-    merge_into(t, changes, prune_buckets=False)
+    t.append(mk(spark, [(f"k{i}", 1, "old", "I", i) for i in range(12)]))
+    changes = mk(spark, [("k0", 1, "new", "U", 100), ("c", 1, "ins", "I", 101)])
+    snap = t.current_snapshot()
+    exact = sorted({
+        r[0] for r in changes.select(bucket_expr(snap.bucket_cols, 4)).collect()
+    })
+    assert len(exact) < 4, "the change-set must leave a bucket untouched"
+    touched = {"collect": None, "exact": exact, "all": [3, 2, 1, 0]}[bucket_set]
+
+    stats = merge_into(t, changes, touched_buckets=touched)
+
     got = {(r.k, r.v) for r in t.read().collect()}
-    assert got == {("a", "new"), ("b", "keep"), ("c", "ins")}
+    assert got == {("k0", "new"), ("c", "ins")} | {(f"k{i}", "old") for i in range(1, 12)}
+    rewritten = set(range(4)) if bucket_set == "all" else set(exact)
+    assert stats["buckets_touched"] == len(rewritten)
+    assert stats["buckets_precomputed"] is (touched is not None)
+    after = {f["path"] for f in t.current_snapshot().files}
+    kept = {f["path"] for f in snap.files if f["bucket"] not in rewritten}
+    assert kept <= after
+    assert not {f["path"] for f in snap.files if f["bucket"] in rewritten} & after
+    if bucket_set != "all":
+        assert kept, "untouched buckets must hold files before the merge"
 
 
 def test_warehouse_relocation(spark, tmp_path):
